@@ -57,29 +57,25 @@ case class IndexManifest(
     round_scale: Int,
     // coarse-assignment metric name (the reference's Dc parameter);
     // query-side probe ordering must use the same metric
-    distance: String = "sqeuclidean",
+    distance: String,
     // (cluster_id, doc_id div granule_window) is the build's granule
     // key: every posting block lies inside one granule, so the window is
     // also a SAFE query-side secondary split key (all of a doc's blocks
-    // across terms share its granule). 0 in pre-r2 manifests.
-    granule_window: Long = 0L,
+    // across terms share its granule)
+    granule_window: Long,
     centroids: Array[Array[Double]],
     // P2 graft (/root/reference/src/persistency.jl:163-241): the coarse
     // quantizer's kNN graph adjacency, serialized with the index and
-    // reloaded at open instead of rebuilt (empty in pre-r2 manifests →
-    // searchers rebuild deterministically)
-    coarse_graph: Array[Array[Int]] = Array.empty,
+    // reloaded at open instead of rebuilt
+    coarse_graph: Array[Array[Int]],
     // upper HNSW layers (index 0 = level 1) — nonempty only beyond
     // GraphCoarseSearch.ExactKnnMax, where the layered incremental
     // build replaces the exact kNN edges (r3; the reference's
     // HierarchicalNSW layers, /root/reference/src/coarsequantizers.jl:58)
-    coarse_graph_upper: Array[Array[Array[Int]]] = Array.empty,
-    // metric the persisted graph's edges were BUILT under [ADVICE r4]:
-    // pre-r4 builders always built SqEuclidean edges regardless of
-    // `distance`, so a non-sqeuclidean index must not silently probe a
-    // mismatched graph — searchers rebuild when this doesn't match
-    // `distance` ("" in pre-r5 manifests)
-    coarse_graph_metric: String = "",
+    coarse_graph_upper: Array[Array[Array[Int]]],
+    // metric the persisted graph's edges were built under [ADVICE r4];
+    // always equal to `distance`
+    coarse_graph_metric: String,
     lineage: InputLineage,
     partitions: Seq[PartitionMeta],
     segments: Seq[SegmentMeta])
@@ -98,10 +94,21 @@ object ManifestIO {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  def read(path: String): IndexManifest =
-    mapper.readValue(
-      new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8),
-      classOf[IndexManifest])
+  /** Reads a manifest written by this code's format version; any other
+    * version fails with a "rebuild the index" error instead of being
+    * read through compatibility defaults.
+    */
+  def read(path: String): IndexManifest = {
+    val tree = mapper.readTree(
+      new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8))
+    val version = tree.path("version").asInt(-1)
+    if (version != IndexBuilder.FormatVersion)
+      throw new IllegalStateException(
+        s"index manifest $path has format version $version, but this " +
+          s"code reads only version ${IndexBuilder.FormatVersion}: " +
+          "rebuild the index")
+    mapper.treeToValue(tree, classOf[IndexManifest])
+  }
 
   def exists(path: String): Boolean = Files.exists(Paths.get(path))
 }

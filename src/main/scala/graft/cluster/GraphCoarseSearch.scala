@@ -138,13 +138,8 @@ object GraphCoarseSearch {
   /** efConstruction for the layered insert. */
   val EfConstruction = 32
 
-  /** Level-0 adjacency. Exact kNN for small kc (rounds 1-2 behavior,
-    * PERSISTED in the manifest — the P2 graft of the reference's HNSW
-    * save/load, /root/reference/src/persistency.jl:163-241); layered
-    * incremental insert beyond [[ExactKnnMax]] [VERDICT r2 #9].
-    */
   /** Graph over `centroids` under `metric` (ONE layered build in the
-    * large regime) — the searcher's rebuild path for pre-r2 manifests.
+    * large regime).
     */
   def apply(centroids: Array[Array[Double]], numNeighbors: Int = 8,
       metric: Distance = Distance.SqEuclidean): GraphCoarseSearch = {
@@ -152,6 +147,11 @@ object GraphCoarseSearch {
     new GraphCoarseSearch(centroids, e, u, metric)
   }
 
+  /** Level-0 adjacency. Exact kNN for small kc (rounds 1-2 behavior,
+    * PERSISTED in the manifest — the P2 graft of the reference's HNSW
+    * save/load, /root/reference/src/persistency.jl:163-241); layered
+    * incremental insert beyond [[ExactKnnMax]] [VERDICT r2 #9].
+    */
   def buildEdges(
       centroids: Array[Array[Double]],
       numNeighbors: Int = 8,

@@ -64,11 +64,8 @@ object Maintenance {
     val avgdl = manifest.avgdl // held until compaction
     // appended segments REUSE the base build's granule window so every
     // block — old or new — stays inside one (cluster, window) granule
-    // and query-side granule splits remain safe (a pre-r2 manifest has
-    // window 0 = "no granules": one unbounded window)
-    val window =
-      if (manifest.granule_window > 0) manifest.granule_window
-      else Long.MaxValue
+    // and query-side granule splits remain safe
+    val window = manifest.granule_window
 
     // no withFeatures wrap: without a pre-materialized `feat` column,
     // withClusterId assigns through the fused codegen content→argmin
@@ -90,7 +87,8 @@ object Maintenance {
 
     val segOffset = (manifest.segments.map(_.segment_id) :+ 0).max + 1
     val (blocks, acc, _) =
-      IndexBuilder.encodeBlocks(spark, docs, avgdl, segOffset, window)
+      IndexBuilder.encodeBlocks(spark, docs, avgdl, segOffset, window,
+        exchange = true)
     blocks.write.mode("append")
       .partitionBy("cluster_id")
       .parquet(s"$indexDir/postings")
@@ -131,9 +129,7 @@ object Maintenance {
     // key relies on it), so consolidation groups decoded entries by
     // their (cluster, doc_id div window) granule — exactly the fragments
     // appends create inside each window get fused, nothing crosses one.
-    val window =
-      if (manifest0.granule_window > 0) manifest0.granule_window
-      else Long.MaxValue
+    val window = manifest0.granule_window
 
     // exact refreshed stats (Long sums → deterministic)
     val statsRow = graft.build.IndexSchemas.readDocstore(spark, indexDir)
@@ -219,8 +215,8 @@ object Maintenance {
       acc.value.asScala.toSeq.sortBy(_.segment_id)
     }
     IndexBuilder.replaceSegments(indexDir, segs)
-    // preserve the granule window: CorpusStats' default (1) would make
-    // the stats.json checkpoint disagree with the manifest [ADVICE r2]
+    // preserve the granule window: the stats.json checkpoint must agree
+    // with the manifest [ADVICE r2]
     IndexBuilder.saveStatsPublic(indexDir,
       IndexBuilder.CorpusStats(n, sumDl, manifest0.granule_window))
     IndexBuilder.writeDictionary(spark, indexDir, n)
@@ -256,9 +252,7 @@ object Maintenance {
     // sorted tombstone array serves BOTH the tombstone filter (the old
     // anti-join) and the id re-rank (the old keys-pass + rank collect):
     // the whole docstore side of the rebuild collapses to one map-side
-    // expression + the slot exchange. Granule weights carry over from
-    // the source index (placement balance only — survivors keep ~their
-    // old granules; correctness never depends on the weights).
+    // expression + the docstore write.
     val deadBc = spark.sparkContext.broadcast(deadArr)
     val survivors = graft.build.IndexSchemas.readDocstore(spark, indexDir)
       .withColumn("_nid",
@@ -276,7 +270,6 @@ object Maintenance {
       knownRows = n - deadArr.length,
       fixedCentroids = Some(manifest.centroids),
       preAssigned = Some(IndexBuilder.PreAssignedSource(
-        IndexBuilder.loadGranuleWeights(indexDir),
         // postings via decode→shift→re-encode of the source blocks —
         // the docstore write above is then compaction's ONLY content
         // pass (see IndexBuilder.transformBlocks)

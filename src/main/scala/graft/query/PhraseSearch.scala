@@ -35,11 +35,8 @@ object PhraseSearch {
     val tombstones = spark.sparkContext.broadcast(
       graft.maintain.Maintenance.loadTombstones(indexDir))
 
-    // pre-r2 manifests have no granule window: single split
-    val window = if (manifest.granule_window > 0) manifest.granule_window
-      else Long.MaxValue
-    val splits =
-      if (manifest.granule_window > 0) IndexSearcher.SplitsPerCluster else 1
+    val window = manifest.granule_window
+    val splits = IndexSearcher.SplitsPerCluster
 
     // projection: positions but no tfs/dls/block_max (column pruning;
     // r7: explicit schema — no per-query footer-inference pass)

@@ -64,40 +64,6 @@ object Corpus {
       col("lang"),
       col("text").as("content"))
 
-  /** Exchange slimming for the GENERATED source table (the build()
-    * path only — an arbitrary F1 source makes no such promise):
-    * `repo`/`path`/`commit` are pure functions of (base doc id, source,
-    * lang), all recoverable from `path` itself
-    * (`src/<source>/<id>.<lang>`). Shipping them through the docstore
-    * slot exchange pays ~40 B/row of shuffle bytes — the non-scaling
-    * resource under the north_rule criterion — to save a post-exchange
-    * re-derivation that is pure CPU, which scales. [[slim]] replaces the
-    * three columns with the packed (`_oid` long, `_src` dictionary
-    * string) pair before the exchange; [[restore]] re-derives them
-    * BIT-IDENTICALLY after (same concat/sha2 arithmetic as
-    * [[sourceTable]]; equality property-tested in Round5Spec).
-    */
-  object SourceRederive {
-    def slim(df: DataFrame): DataFrame = df
-      .withColumn("_oid",
-        substring_index(substring_index(col("path"), "/", -1), ".", 1)
-          .cast("long"))
-      .withColumn("_src",
-        substring_index(substring_index(col("path"), "/", 2), "/", -1))
-      .drop("repo", "path", "commit")
-
-    def restore(df: DataFrame): DataFrame = df
-      .withColumn("repo",
-        concat(lit("repo-"), (col("_oid") % 13).cast("string")))
-      .withColumn("path",
-        concat(lit("src/"), col("_src"), lit("/"),
-          col("_oid").cast("string"), lit("."), col("lang")))
-      .withColumn("commit",
-        substring(sha2(concat(lit("c"), col("_oid").cast("string")), 256),
-          1, 12))
-      .drop("_oid", "_src")
-  }
-
   /** DuckDB CTE body producing the identical F1 table from `documents`.
     * NB: `commit` is a DuckDB keyword — always quoted.
     */
@@ -113,10 +79,12 @@ object Corpus {
     * (/root/reference/src/index.jl:189, 0-based).
     *
     * Scalable form: a global `row_number() OVER (ORDER BY ...)` would
-    * funnel all rows through ONE partition. Two strategies, both exact,
-    * both producing the identical ids (= global rank of the unique key):
+    * funnel all rows through ONE partition. Two distributed strategies
+    * (plus the broadcast one's driver-sort shortcut for small known row
+    * counts, [[IdDriverSortMaxDocs]]), all exact, all producing the
+    * identical ids (= global rank of the unique key):
     *
-    *  - "broadcast" (default up to [[IdBroadcastMaxDocs]] rows): ONE
+    *  - broadcast (picked up to [[IdBroadcastMaxDocs]] rows): ONE
     *    keys-only job (range-repartition just the sort columns — tiny
     *    bytes — sort, and collect each partition's xxhash64 sequence in
     *    order) gives the driver the exact (key hash → rank) map, which
@@ -126,7 +94,7 @@ object Corpus {
     *    the content bytes) plus one hash probe per row. Any hash
     *    collision (or duplicate key) is detected exactly on the driver
     *    and falls back to the exchange strategy.
-    *  - "exchange" (any scale): range-repartition the full rows on the
+    *  - exchange (any scale): range-repartition the full rows on the
     *    sort key, count rows per partition (one light job over the
     *    cached exchange), then id = partition offset + local row index
     *    via a stateful leaf expression (PartitionOffsetRowIndex)
@@ -163,10 +131,9 @@ object Corpus {
 
   /** Broadcast-strategy cutover: above this many rows the (hash → id)
     * map (~32 B/row) is no longer worth collecting/broadcasting and the
-    * exchange strategy takes over. Env-overridable for experiments.
+    * exchange strategy takes over.
     */
-  val IdBroadcastMaxDocs: Long =
-    sys.env.getOrElse("GRAFT_ID_BROADCAST_MAX", "4194304").toLong
+  val IdBroadcastMaxDocs: Long = 4194304L
 
   /** Driver-sort cutover inside the broadcast strategy (r7): when the
     * caller KNOWS the row count (parquet metadata — build() always
@@ -180,31 +147,34 @@ object Corpus {
     * path, and the collect is hard-limited at bound+1 rows so a wrong
     * hint can never blow up the driver (one extra row ⇒ fall back).
     */
-  val IdDriverSortMaxDocs: Long =
-    sys.env.getOrElse("GRAFT_ID_DRIVERSORT_MAX", "65536").toLong
+  val IdDriverSortMaxDocs: Long = 65536L
 
+  /** `strategy`: "auto" picks driver-sort, then broadcast, then exchange
+    * (each falls through to the next when it cannot assign exactly);
+    * "exchange" forces the range-exchange path, the reference the other
+    * two are tested against.
+    */
   def withDenseIdCounted(
       df: DataFrame,
       sortCols: Seq[String],
       idCol: String,
       numPartitions: Int = 0,
-      strategy: String = sys.env.getOrElse("GRAFT_ID_STRATEGY", "auto"),
+      strategy: String = "auto",
       broadcastMaxDocs: Long = IdBroadcastMaxDocs,
       rowHint: Long = 0L): DenseId = {
-    require(Set("auto", "broadcast", "exchange")(strategy),
+    require(Set("auto", "exchange")(strategy),
       s"unknown id strategy: $strategy")
     if (strategy == "exchange") withDenseIdExchange(df, sortCols, idCol, numPartitions)
     else withDenseIdDriverSort(df, sortCols, idCol, rowHint)
       .orElse(withDenseIdBroadcast(df, sortCols, idCol, numPartitions,
-        forced = strategy == "broadcast", maxDocs = broadcastMaxDocs))
+        maxDocs = broadcastMaxDocs))
       .getOrElse(withDenseIdExchange(df, sortCols, idCol, numPartitions))
-
   }
 
   /** Driver-sort variant of the broadcast strategy — see
     * [[IdDriverSortMaxDocs]]. None = no/over-bound hint, non-string
-    * keys, duplicate keys, or a hash collision — the caller falls
-    * through to the distributed strategies.
+    * keys, a null key, duplicate keys, or a hash collision — the caller
+    * falls through to the distributed strategies.
     */
   private def withDenseIdDriverSort(
       df: DataFrame,
@@ -224,9 +194,12 @@ object Corpus {
       .limit((maxDocs + 1).toInt)
       .collect()
     if (rows.length > maxDocs) return None
+    val k = sortCols.length
+    // null keys sort first in Spark's order but have no UTF8String to
+    // compare here — leave them to the distributed strategies
+    if (rows.exists(r => (0 until k).exists(r.isNullAt))) return None
     if (rows.isEmpty) return Some(DenseId(
       df.withColumn(idCol, lit(0L)).filter(lit(false)), 0L, () => ()))
-    val k = sortCols.length
     import org.apache.spark.unsafe.types.UTF8String
     val sorted = rows.map { r =>
       (Array.tabulate(k)(i => UTF8String.fromString(r.getString(i))),
@@ -267,7 +240,6 @@ object Corpus {
       sortCols: Seq[String],
       idCol: String,
       numPartitions: Int,
-      forced: Boolean,
       maxDocs: Long): Option[DenseId] = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -278,9 +250,7 @@ object Corpus {
     // per-partition cap: range partitions are balanced, so 4× the even
     // share of the threshold is generous; a partition over the cap stops
     // buffering hashes (count continues) and the driver falls back
-    val cap =
-      if (forced) Long.MaxValue
-      else math.max(16L, 4L * maxDocs / parts)
+    val cap = math.max(16L, 4L * maxDocs / parts)
     // cached: the range partitioner's boundary-sampling job and the
     // collect job below both read the keys — without the cache each
     // would re-derive them from the source (for generated/projected
@@ -308,8 +278,7 @@ object Corpus {
     val total = perPart.map(_._2).sum
     if (total == 0) return Some(DenseId(
       df.withColumn(idCol, lit(0L)).filter(lit(false)), 0L, () => ()))
-    if (!forced &&
-        (total > maxDocs || perPart.exists(p => p._2 > p._3.length)))
+    if (total > maxDocs || perPart.exists(p => p._2 > p._3.length))
       return None
     val map = new graft.functions.LongLongMap(total)
     var id = 0L
@@ -320,11 +289,7 @@ object Corpus {
     })
     // a collision (two keys with equal xxhash64, or a duplicate key)
     // would silently mis-assign ids — exactness wins, use the exchange
-    if (collision) {
-      require(!forced, "duplicate key or hash collision under forced " +
-        "broadcast id strategy")
-      return None
-    }
+    if (collision) return None
     val bc = spark.sparkContext.broadcast(map)
     val out = df.withColumn(idCol,
       graft.functions.IdLookupExpr.col(xxhash64(cols: _*), bc))
@@ -394,10 +359,8 @@ object Corpus {
       src: DataFrame,
       idOrder: Seq[String] = Seq("repo", "path", "commit"),
       idOffset: Long = 0L,
-      idStrategy: String = sys.env.getOrElse("GRAFT_ID_STRATEGY", "auto"),
       rowHint: Long = 0L): DenseId = {
-    val dense = withDenseIdCounted(src, idOrder, "doc_id",
-      strategy = idStrategy, rowHint = rowHint)
+    val dense = withDenseIdCounted(src, idOrder, "doc_id", rowHint = rowHint)
     val out = dense.df
       .withColumn("doc_id", col("doc_id") + idOffset)
       .withColumn("content_sha", sha2(col("content"), 256))

@@ -1,0 +1,43 @@
+package graft
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Keeps environment-switched code paths out of the engine: every build,
+  * query and maintenance step has one path, chosen in code. The only
+  * environment reads allowed are the bench/verify mains' own settings
+  * and `Indexes.scratchBase` (GRAFT_SCRATCH_DIR, a deployment path that
+  * changes where an index lives, never how it is built).
+  */
+class EnvLeverSpec extends AnyFunSuite {
+
+  test("no environment reads in src/main/scala outside Bench, Verify and Indexes.scratchBase") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 30, s"only ${files.size} sources under $root")
+    val envRead = """sys\.env|System\.getenv""".r
+    def reads(f: Path): Seq[(Int, String)] =
+      new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
+        .split("\n").toSeq.zipWithIndex
+        .collect { case (l, i) if envRead.findFirstIn(l).nonEmpty =>
+          (i + 1, l.trim) }
+    val exempt = Set("Bench.scala", "Verify.scala")
+    val offenders = files
+      .filterNot(f => exempt(f.getFileName.toString))
+      .flatMap(f => reads(f).map { case (n, l) => s"$f:$n: $l" })
+      .filterNot(_.contains("Indexes.scala:"))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    // Indexes.scala: exactly the one scratch-dir read
+    val indexes = files.filter(_.getFileName.toString == "Indexes.scala")
+    assert(indexes.size == 1)
+    val idx = reads(indexes.head)
+    assert(idx.size == 1 && idx.head._2.contains("\"GRAFT_SCRATCH_DIR\""),
+      idx.mkString("\n"))
+  }
+}

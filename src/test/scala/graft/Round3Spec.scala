@@ -354,12 +354,6 @@ class Round3Spec extends SparkSpec {
     assert(d.df.select("id").collect().map(_.getLong(0)).sorted.toSeq
       == (0L until 1000L))
     d.unpersist()
-
-    // forced broadcast with duplicate keys must refuse loudly, never
-    // mis-assign
-    intercept[IllegalArgumentException] {
-      Corpus.withDenseIdCounted(dup, Seq("key"), "id", strategy = "broadcast")
-    }
   }
 
   test("LongLongMap: collision-free puts, probe chains, and rejects") {
@@ -375,17 +369,22 @@ class Round3Spec extends SparkSpec {
 
   test("broadcast and exchange id strategies assign identical ids") {
     val src = Corpus.sourceTable(spark, sf0001)
-    def ids(strategy: String): (Long, Seq[(String, String, String, Long)]) = {
+    def ids(strategy: String)
+        : (Long, Seq[(String, String, String, Long)], String) = {
       val d = Corpus.withDenseIdCounted(src, Seq("repo", "path", "commit"),
         "doc_id", strategy = strategy)
+      val plan = d.df.queryExecution.executedPlan.toString
       val rows = d.df.select("repo", "path", "commit", "doc_id").collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
         .sortBy(t => (t._1, t._2, t._3)).toSeq
       d.unpersist()
-      (d.numRows, rows)
+      (d.numRows, rows, plan)
     }
-    val (nB, idsB) = ids("broadcast")
-    val (nE, idsE) = ids("exchange")
+    // "auto" with no row hint skips the driver-sort shortcut and, under
+    // the broadcast threshold, takes the broadcast path
+    val (nB, idsB, planB) = ids("auto")
+    assert(planB.toLowerCase.contains("idlookup"), planB)
+    val (nE, idsE, _) = ids("exchange")
     assert(nB == nE && nB > 0)
     assert(idsB == idsE)
     // and they are exactly the dense 0-based ranks in key order
@@ -430,32 +429,6 @@ class Round3Spec extends SparkSpec {
         })
       assert(res2.passed, res2.status.toString)
     }
-  }
-
-  // ------------------------------------------------------------------
-  // zero-shuffle postings == exchange-path postings (query-visible)
-  // ------------------------------------------------------------------
-
-  test("postings built with and without the exchange answer identically") {
-    import graft.query.{IndexSearcher, QuerySet}
-    def buildAnd(q: Boolean): (String, graft.build.IndexManifest) = {
-      val dir = Files.createTempDirectory(s"graft-r3-px-$q").toString
-      IndexBuilder.build(spark, sf0001, dir,
-        IndexBuilder.BuildConfig(resume = false, postingsExchange = q))
-      (dir, ManifestIO.read(s"$dir/manifest.json"))
-    }
-    val (dirA, mA) = buildAnd(false) // r3 default: no exchange
-    val (dirB, mB) = buildAnd(true) // r2 path: granule-slot exchange
-    // same totals per cluster (blocks/segments may differ in shape)
-    assert(mA.partitions.map(p => (p.cluster_id, p.num_docs, p.num_postings))
-      == mB.partitions.map(p => (p.cluster_id, p.num_docs, p.num_postings)))
-    // rank-identical WAND answers
-    def ans(dir: String) = IndexSearcher
-      .topK(spark, dir, QuerySet.queries.take(8), 10)
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-      .toSeq
-    assert(ans(dirA) == ans(dirB))
   }
 
   // ------------------------------------------------------------------

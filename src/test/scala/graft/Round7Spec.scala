@@ -112,9 +112,10 @@ class Round7Spec extends SparkSpec {
     // adversarial keys: non-ASCII (incl. a supplementary character,
     // where UTF-16 code-unit order and UTF8 binary order could diverge
     // if the driver sort used plain String ordering), empties, shared
-    // prefixes
+    // prefixes, and a null (Spark sorts it first; the driver sort
+    // hands it to the distributed path instead of comparing it)
     val keys = Seq("b", "a", "éclair", "zz", "😀emoji",
-      "é", "aa", "", "Z", "z", "中文", "a b")
+      "é", "aa", "", "Z", "z", "中文", "a b", null)
     val src = keys.zipWithIndex
       .map { case (k, i) => (k, s"p$i", s"c$i") }
       .toDF("repo", "path", "commit")
@@ -123,7 +124,8 @@ class Round7Spec extends SparkSpec {
       .withDenseIdCounted(src, Seq("repo", "path", "commit"), "id",
         strategy = strategy, rowHint = hint)
       .df.select(col("repo"), col("id"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+      .sortBy(r => Option(r._1))
     val viaDriver = ids("auto", keys.size.toLong) // driver-sort path
     val viaExchange = ids("exchange", 0L)
     assert(viaDriver.toSeq == viaExchange.toSeq)
