@@ -31,8 +31,10 @@ import graft.tokenize.Tokenizer
   *   docstore/    parquet, partitionBy(cluster_id) — lossless row store
   *   dictionary/  parquet (term, df, cf, idf)
   *   postings/    parquet, partitionBy(cluster_id) of PostingBlock rows
-  *   manifest.json
-  *   _checkpoints/<step>.done — resumable build markers
+  *   manifest.json — the built index's whole state
+  *   _checkpoints/ — build-only scratch: the step and batch `.done`
+  *     markers, fingerprint.txt and one build-state file
+  *     ([[BuildState]]); nothing outside this object reads or writes it
   *
   * SCALE NOTES (100 TB):
   *  - range partitioning on (cluster_id, doc_id) both balances segment
@@ -56,7 +58,7 @@ object IndexBuilder {
     * every older index fail to open with a "rebuild the index" error
     * instead of being read through compatibility branches.
     */
-  val FormatVersion = 6
+  val FormatVersion = 7
 
   /** Granule window: each (cluster_id, doc_id div W) granule holds at
     * most W dense doc ids. Because W bounds granule size regardless of
@@ -243,12 +245,13 @@ object IndexBuilder {
     // write's range-partitioner sampling; the granule-hash exchange
     // needs no sampling at all.
     step("docstore") {
-      preAssigned match {
+      val (centroids, window, written) = preAssigned match {
         case Some(_) =>
-          docstorePreAssigned(spark, source, indexDir,
-            fixedCentroids.getOrElse(sys.error(
-              "preAssigned requires fixedCentroids")),
-            knownRows)
+          val centroids = fixedCentroids.getOrElse(sys.error(
+            "preAssigned requires fixedCentroids"))
+          val (window, written) =
+            docstorePreAssigned(spark, source, indexDir, centroids, knownRows)
+          (centroids, window, written)
         case None =>
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
@@ -339,7 +342,6 @@ object IndexBuilder {
         if (pre != null) pre
         else CoarseClusterer.fitLocal(sampleIds, kc, dist = cfg.distance)
       }
-      saveCentroids(indexDir, centroids)
       val parts = spark.sessionState.conf.numShufflePartitions
       val window = granuleWindow(n, parts)
       // granule weights estimated from the (deterministic) kmeans sample
@@ -353,12 +355,6 @@ object IndexBuilder {
         .toSeq
       val slotCol = GranulePartitioner.slotKeyCol(
         GranulePartitioner.slotMap(weights, parts), window, parts) _
-      val obs = Observation()
-      val metrics =
-        count(lit(1)).as("n") +: sum(col("doc_len")).as("sum_dl") +:
-          min(col("doc_id")).as("min_id") +:
-          (0 until kc).map(c =>
-            sum(when(col("cluster_id") === c, 1L).otherwise(0L)).as(s"c$c"))
       // fused content→features→argmin assignment, one codegen call per
       // row with a reused feature buffer — no feat array column, no udf
       // Seq boxing on the build's biggest stage (r3; ClusterAssignExpr).
@@ -366,15 +362,14 @@ object IndexBuilder {
       // docsFromCounted TokenCountExpr column is dropped and its
       // second full tokenize pass pruned from this job entirely
       // (token count == sum of feature buckets, property-tested)
-      val clustered = dense.df
+      val (clustered, written) = observeDocstore(dense.df
         .drop("doc_len")
         .withColumn("_cl", graft.functions.ClusterAssignExpr
           .clusterIdAndLen(col("content"), centroids, cfg.distance))
         .withColumn("cluster_id", shiftright(col("_cl"), 32).cast("int"))
         .withColumn("doc_len",
           col("_cl").bitwiseAND(lit(0xffffffffL)).cast("int"))
-        .drop("_cl")
-        .observe(obs, metrics.head, metrics.tail: _*)
+        .drop("_cl"), kc)
       // granule-slot exchange ahead of the write — the build's ONE
       // content shuffle: each task holds a few CONTIGUOUS (cluster, doc
       // range) slices → ~2 files per cluster instead of tasks ×
@@ -400,19 +395,25 @@ object IndexBuilder {
         .partitionBy("cluster_id")
         .parquet(s"$indexDir/docstore")
       dense.unpersist()
-      val m = obs.get
+      val w = written()
       // a negative id = the broadcast id lookup saw a key its keys-only
       // pass did not (non-deterministic source) — fail the build, the
       // docstore written above is not trustworthy
-      require(m("min_id").asInstanceOf[Long] >= 0,
-        s"dense-id lookup missed a key (min doc_id = ${m("min_id")}): " +
+      require(w.min_id >= 0,
+        s"dense-id lookup missed a key (min doc_id = ${w.min_id}): " +
           "the source is not deterministic across jobs")
-      saveStats(indexDir,
-        CorpusStats(n, m("sum_dl").asInstanceOf[Long], window))
-      saveDocCounts(indexDir, (0 until kc)
-        .map(c => c -> m(s"c$c").asInstanceOf[Long])
-        .filter(_._2 > 0).toMap)
+      (centroids, window, w)
       }
+      // a resumed build keeps what the finished postings batches and the
+      // dictionary step recorded: their markers still stand
+      val kept =
+        if (cfg.resume && Files.exists(statePath(indexDir)))
+          Some(loadState(indexDir))
+        else None
+      saveState(indexDir, BuildState(written, window, centroids,
+        kept.fold(Seq.empty[ClusterStat])(_.cluster_stats),
+        kept.fold(Seq.empty[SegmentMeta])(_.segments),
+        kept.fold(-1L)(_.vocab_size)))
     }
 
     def docstore = IndexSchemas.readDocstore(spark, indexDir)
@@ -427,9 +428,9 @@ object IndexBuilder {
     // marker. A crashed build resumes at the first unfinished batch,
     // first wiping that batch's partial partition dirs.
     step("postings") {
-      val stats = loadStats(indexDir)
-      val avgdl = stats.avgdl
-      val kc = loadCentroids(indexDir).length
+      val state = loadState(indexDir)
+      val avgdl = state.avgdl
+      val kc = state.centroids.length
       val parts = spark.sessionState.conf.numShufflePartitions
       val batches = clusterBatches(kc, cfg.postingsBatches)
       if (!cfg.resume) {
@@ -438,22 +439,16 @@ object IndexBuilder {
         org.apache.commons.io.FileUtils.deleteQuietly(
           new java.io.File(s"$indexDir/postings"))
         val ck = new java.io.File(s"$indexDir/_checkpoints")
-        // batch markers AND per-batch cluster stats: a dir previously
-        // built with a different postingsBatches count would otherwise
-        // leave stale clusterstats_batch_*.json files that
-        // loadAllClusterStats sums into the manifest [ADVICE r2]
         if (ck.isDirectory) ck.listFiles()
-          .filter(f => f.getName.startsWith("postings_batch_") ||
-            f.getName.startsWith("clusterstats_batch_"))
+          .filter(_.getName.startsWith("postings_batch_"))
           .foreach(_.delete())
-        saveSegments(indexDir, Seq.empty)
       }
       // batches are INDEPENDENT (disjoint clusters, own staging dir, own
       // marker), so pending ones are submitted CONCURRENTLY from driver
       // threads — the scheduler interleaves their stages and the
       // inter-batch barrier (idle cores at each batch's straggler tail)
       // disappears. Spark's FIFO scheduler backfills idle slots with the
-      // next job's tasks. Metadata checkpoint writes share `metaLock`.
+      // next job's tasks. Build-state updates share `metaLock`.
       val metaLock = new Object
       val pending = batches.zipWithIndex.flatMap { case (clusters, bi) =>
         val marker = s"postings_batch_$bi"
@@ -512,12 +507,12 @@ object IndexBuilder {
               val oldSlice = IndexSchemas.readPostings(spark, srcDir)
                 .filter(col("cluster_id").isin(clusters: _*))
               transformBlocks(spark, oldSlice, deadBc, avgdl, segOffset,
-                stats.granule_window)
+                state.granule_window)
             case None =>
               val slice = docstore
                 .filter(col("cluster_id").isin(clusters: _*))
               encodeBlocks(spark, slice, avgdl,
-                segOffset, stats.granule_window, exchange = false)
+                segOffset, state.granule_window, exchange = false)
           }
           blocks.write.mode("overwrite")
             .partitionBy("cluster_id")
@@ -531,17 +526,17 @@ object IndexBuilder {
             }
           org.apache.commons.io.FileUtils.deleteQuietly(
             new java.io.File(staging))
-          val segs = {
-            import scala.jdk.CollectionConverters._
-            acc.value.asScala.toSeq.sortBy(_.segment_id)
-          }
-          val cstats = {
-            import scala.jdk.CollectionConverters._
-            cacc.value.asScala.toSeq.sortBy(_.cluster_id)
-          }
           metaLock.synchronized {
-            appendSegments(indexDir, segs, segOffset, segOffset + 10000)
-            saveClusterStats(indexDir, bi, cstats)
+            // a (re-)run batch replaces its clusters' stats and its
+            // ENTIRE segment-id range [segOffset, segOffset + 10000)
+            val st = loadState(indexDir)
+            saveState(indexDir, st.copy(
+              cluster_stats = st.cluster_stats
+                .filterNot(c => clusters.contains(c.cluster_id)) ++
+                collected(cacc),
+              segments = (st.segments.filterNot(s =>
+                s.segment_id >= segOffset && s.segment_id < segOffset + 10000)
+                ++ collected(acc)).sortBy(_.segment_id)))
             markDone(indexDir, marker,
               s"input=$sfDir clusters=${clusters.mkString(",")}")
             run :+= marker
@@ -557,7 +552,11 @@ object IndexBuilder {
     // The HNSW coarse-graph build (B7) is driver-local CPU that depends
     // only on the centroids, fixed since the docstore step — start it
     // here so the dictionary job's wall absorbs it instead of paying it
-    // serially inside the manifest step [VERDICT r5 #6].
+    // serially inside the manifest step [VERDICT r5 #6]. One graph
+    // build, both regimes (exact kNN edges below ExactKnnMax, layered
+    // incremental insert above), under the index's own coarse metric
+    // so the sub-linear probe works for any Dc [VERDICT r3].
+    // Maintenance never retrains the centroids: it carries the graph.
     val graphF: Option[scala.concurrent.Future[
         (Array[Array[Int]], Array[Array[Array[Int]]])]] =
       if (cfg.resume && isDone(indexDir, "manifest")) None
@@ -565,29 +564,24 @@ object IndexBuilder {
         import scala.concurrent.ExecutionContext.Implicits.global
         scala.concurrent.Future {
           graft.cluster.GraphCoarseSearch.buildGraph(
-            loadCentroids(indexDir), metric = cfg.distance)
+            loadState(indexDir).centroids, metric = cfg.distance)
         }
       }
     step("dictionary") {
-      writeDictionary(spark, indexDir, loadStats(indexDir).num_docs)
+      val st = loadState(indexDir)
+      saveState(indexDir, st.copy(vocab_size =
+        writeDictionary(spark, indexDir, st.docstore.num_docs)))
     }
 
-    // ---- step 4: manifest (ZERO jobs: assembled from the stats the
-    // earlier steps observed/accumulated — doc counts from the docstore
-    // write observation, block stats from the encode accumulator, vocab
-    // from the dictionary write observation) -----------------------------
+    // ---- step 4: manifest (ZERO jobs: assembled from the build state —
+    // doc counts from the docstore write observation, block stats from
+    // the encode accumulators, vocab from the dictionary write
+    // observation) --------------------------------------------------------
     step("manifest") {
-      val cstats = loadStats(indexDir)
-      writeManifest(spark, indexDir, cstats.num_docs, cstats.avgdl, sfDir,
-        vocabOpt = loadVocab(indexDir),
-        docCountsOpt = loadDocCounts(indexDir),
-        clusterStatsOpt = Some(loadAllClusterStats(indexDir))
-          .filter(_.nonEmpty),
-        granuleWindow = cstats.granule_window,
-        distanceName = graft.cluster.Distance.name(cfg.distance),
-        coarseGraphOpt = graphF.map(f =>
-          scala.concurrent.Await.result(
-            f, scala.concurrent.duration.Duration.Inf)))
+      writeManifest(indexDir, loadState(indexDir), sfDir,
+        graft.cluster.Distance.name(cfg.distance),
+        scala.concurrent.Await.result(
+          graphF.get, scala.concurrent.duration.Duration.Inf))
     }
 
     val manifest = ManifestIO.read(s"$indexDir/manifest.json")
@@ -612,25 +606,18 @@ object IndexBuilder {
     * with the corpus stats observed on the write like the normal path.
     * The write observation's row count is REQUIRED to equal knownRows:
     * a wrong caller-side id shift cannot silently produce a plausible
-    * index.
+    * index. Returns the granule window and the write observation.
     */
   private def docstorePreAssigned(
       spark: SparkSession,
       source: DataFrame,
       indexDir: String,
       centroids: Array[Array[Double]],
-      knownRows: Long): Unit = {
+      knownRows: Long): (Long, DocstoreWrite) = {
     require(knownRows > 0, "preAssigned requires exact knownRows > 0")
-    val kc = centroids.length
-    saveCentroids(indexDir, centroids)
     val parts = spark.sessionState.conf.numShufflePartitions
     val window = granuleWindow(knownRows, parts)
-    val obs = Observation()
-    val metrics =
-      count(lit(1)).as("n") +: sum(col("doc_len")).as("sum_dl") +:
-        min(col("doc_id")).as("min_id") +:
-        (0 until kc).map(c =>
-          sum(when(col("cluster_id") === c, 1L).otherwise(0L)).as(s"c$c"))
+    val (observed, written) = observeDocstore(source, centroids.length)
     // ZERO-exchange write (r7): the source IS the old docstore — its
     // files are cluster-partitioned and (cluster, doc)-sorted, the
     // tombstone filter preserves order, and the id shift is monotone,
@@ -643,34 +630,93 @@ object IndexBuilder {
     // anywhere. Stored content_sha rides through unchanged (it is
     // already materialized — re-deriving it would cost n sha2 calls to
     // save nothing).
-    source
-      .observe(obs, metrics.head, metrics.tail: _*)
+    observed
       .sortWithinPartitions(col("cluster_id"), col("doc_id"))
       .select("doc_id", "repo", "path", "commit", "lang",
         "content", "cluster_id", "doc_len", "content_sha")
       .write.mode("overwrite")
       .partitionBy("cluster_id")
       .parquet(s"$indexDir/docstore")
-    val m = obs.get
-    val n = m("n").asInstanceOf[Long]
-    require(n == knownRows,
-      s"preAssigned row count $n != expected $knownRows: " +
+    val w = written()
+    require(w.num_docs == knownRows,
+      s"preAssigned row count ${w.num_docs} != expected $knownRows: " +
         "the caller's id shift and the source disagree")
-    require(m("min_id").asInstanceOf[Long] >= 0,
-      "preAssigned ids must be dense non-negative")
-    saveStats(indexDir,
-      CorpusStats(n, m("sum_dl").asInstanceOf[Long], window))
-    saveDocCounts(indexDir, (0 until kc)
-      .map(c => c -> m(s"c$c").asInstanceOf[Long])
-      .filter(_._2 > 0).toMap)
+    require(w.min_id >= 0, "preAssigned ids must be dense non-negative")
+    (window, w)
   }
 
-  // centroids + segment metrics stashed as JSON between steps (part of
-  // the checkpoint state a resumed build reloads)
-  private val mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(new com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    m
+  /** What a docstore write observed: rows, Σ doc_len, the smallest
+    * doc_id and `doc_counts(c)` = rows in cluster c.
+    */
+  case class DocstoreWrite(num_docs: Long, sum_dl: Long, min_id: Long,
+      doc_counts: Array[Long]) {
+    def perCluster: Seq[(Int, Long)] = doc_counts.toSeq.zipWithIndex.map(_.swap)
+  }
+
+  /** Attaches the docstore-write observation to `docs` (doc_id, doc_len
+    * and cluster_id in [0, kc)): the stats come free with the write job
+    * itself. The returned thunk blocks until an action on the returned
+    * frame has run.
+    */
+  def observeDocstore(docs: DataFrame, kc: Int): (DataFrame, () => DocstoreWrite) = {
+    val obs = Observation()
+    val metrics =
+      count(lit(1)).as("n") +: sum(col("doc_len")).as("sum_dl") +:
+        min(col("doc_id")).as("min_id") +:
+        (0 until kc).map(c =>
+          sum(when(col("cluster_id") === c, 1L).otherwise(0L)).as(s"c$c"))
+    (docs.observe(obs, metrics.head, metrics.tail: _*), { () =>
+      val m = obs.get
+      DocstoreWrite(m("n").asInstanceOf[Long], m("sum_dl").asInstanceOf[Long],
+        m("min_id").asInstanceOf[Long],
+        Array.tabulate(kc)(c => m(s"c$c").asInstanceOf[Long]))
+    })
+  }
+
+  /** The accumulators an encode job reports through: one [[SegmentMeta]]
+    * per task and one [[ClusterStat]] per (task, cluster).
+    */
+  def encodeAccumulators(spark: SparkSession):
+      (CollectionAccumulator[SegmentMeta], CollectionAccumulator[ClusterStat]) =
+    (spark.sparkContext.collectionAccumulator[SegmentMeta]("segments"),
+      spark.sparkContext.collectionAccumulator[ClusterStat]("cluster-stats"))
+
+  def collected[T](acc: CollectionAccumulator[T]): Seq[T] = {
+    import scala.jdk.CollectionConverters._
+    acc.value.asScala.toSeq
+  }
+
+  /** One encode task's tally: per-cluster postings, blocks, bytes and
+    * encode nanos. [[report]] emits the cluster stats and the task's
+    * segment meta (the sum over its clusters).
+    */
+  final class EncodeTally(segId: Int) {
+    private val t0 = System.nanoTime()
+    private val perCluster =
+      scala.collection.mutable.LinkedHashMap.empty[Int, Array[Long]]
+
+    def add(clusterId: Int, postings: Long, blocks: Seq[PostingBlock],
+        nanos: Long): Unit = {
+      val cs = perCluster.getOrElseUpdate(clusterId, new Array[Long](4))
+      cs(0) += postings
+      cs(1) += blocks.size
+      cs(2) += blocks.map(PostingCodec.storedBytes).sum
+      cs(3) += nanos
+    }
+
+    def report(acc: CollectionAccumulator[SegmentMeta],
+        cacc: CollectionAccumulator[ClusterStat]): Unit = {
+      val millis = math.max(1L, (System.nanoTime() - t0) / 1000000L)
+      val nPostings = perCluster.values.map(_(0)).sum
+      val nBytes = perCluster.values.map(_(2)).sum
+      if (nPostings > 0) acc.add(SegmentMeta(
+        segId, nPostings, perCluster.values.map(_(1)).sum, nBytes, millis,
+        nPostings * 1000.0 / millis, nBytes.toDouble / nPostings))
+      perCluster.foreach { case (cid, cs) =>
+        cacc.add(ClusterStat(cid, cs(0), cs(1), cs(2),
+          math.max(1L, cs(3) / 1000000L)))
+      }
+    }
   }
 
   /** The B6 heart: docs → posting rows (one char-scan tokenize pass) →
@@ -697,10 +743,7 @@ object IndexBuilder {
       CollectionAccumulator[SegmentMeta], CollectionAccumulator[ClusterStat]) = {
     import spark.implicits._
     require(window >= 1, s"granule window must be >= 1, got $window")
-    val acc: CollectionAccumulator[SegmentMeta] =
-      spark.sparkContext.collectionAccumulator[SegmentMeta]("segments")
-    val cacc: CollectionAccumulator[ClusterStat] =
-      spark.sparkContext.collectionAccumulator[ClusterStat]("cluster-stats")
+    val (acc, cacc) = encodeAccumulators(spark)
     val parts = spark.sessionState.conf.numShufflePartitions
     val w = window
 
@@ -809,14 +852,9 @@ object IndexBuilder {
       .as[(String, Int, Long, Int, Int, Array[Int])]
       .mapPartitions { rows =>
         val segId = TaskContext.getPartitionId() + segmentOffset
-        val tStart = System.nanoTime()
-        var nPostings = 0L
-        var nBlocks = 0L
-        var nBytes = 0L
-        // per-cluster encode metrics (cluster → postings, blocks, bytes,
-        // encode nanos) — the manifest's PartitionMeta without a scan
-        val perCluster = scala.collection.mutable.LinkedHashMap
-          .empty[Int, Array[Long]]
+        // per-cluster encode metrics — the manifest's PartitionMeta
+        // without a scan
+        val tally = new EncodeTally(segId)
         val out = scala.collection.mutable.ArrayBuffer.empty[PostingBlock]
         var curKey: (Int, Long, String) = null // (cluster, granule, term)
         val buf = scala.collection.mutable.ArrayBuffer.empty[PostingEntry]
@@ -824,18 +862,8 @@ object IndexBuilder {
           val f0 = System.nanoTime()
           val bs = PostingCodec.encodeTerm(curKey._3, curKey._1, segId,
             buf.toSeq, (tf, dl) => Bm25.g(tf, dl, avgdl))
-          val cs = perCluster.getOrElseUpdate(curKey._1, new Array[Long](4))
-          bs.foreach { b =>
-            out += b
-            nBlocks += 1
-            val sb = PostingCodec.storedBytes(b)
-            nBytes += sb
-            cs(1) += 1
-            cs(2) += sb
-          }
-          nPostings += buf.size
-          cs(0) += buf.size
-          cs(3) += System.nanoTime() - f0
+          out ++= bs
+          tally.add(curKey._1, buf.size, bs, System.nanoTime() - f0)
           buf.clear()
         }
         rows.foreach { case (term, cid, docId, tf, dl, pos) =>
@@ -844,15 +872,7 @@ object IndexBuilder {
           buf += PostingEntry(docId, tf, dl, pos)
         }
         flush()
-        val millis = math.max(1L, (System.nanoTime() - tStart) / 1000000L)
-        if (nPostings > 0) acc.add(SegmentMeta(
-          segId, nPostings, nBlocks, nBytes, millis,
-          nPostings * 1000.0 / millis,
-          nBytes.toDouble / nPostings))
-        perCluster.foreach { case (cid, cs) =>
-          cacc.add(ClusterStat(cid, cs(0), cs(1), cs(2),
-            math.max(1L, cs(3) / 1000000L)))
-        }
+        tally.report(acc, cacc)
         out.iterator
       }
   }
@@ -881,10 +901,7 @@ object IndexBuilder {
       CollectionAccumulator[SegmentMeta], CollectionAccumulator[ClusterStat]) = {
     import spark.implicits._
     require(window >= 1, s"granule window must be >= 1, got $window")
-    val acc: CollectionAccumulator[SegmentMeta] =
-      spark.sparkContext.collectionAccumulator[SegmentMeta]("segments")
-    val cacc: CollectionAccumulator[ClusterStat] =
-      spark.sparkContext.collectionAccumulator[ClusterStat]("cluster-stats")
+    val (acc, cacc) = encodeAccumulators(spark)
     val postingRows = oldBlocks
       .as[PostingBlock]
       .mapPartitions { it =>
@@ -941,206 +958,81 @@ object IndexBuilder {
     if (Files.exists(target)) Files.move(target, aside)
     Files.move(Paths.get(tmp), target)
     org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
-    val vocab = obs.get("vocab").asInstanceOf[Long]
-    saveVocab(indexDir, vocab)
-    vocab
+    obs.get("vocab").asInstanceOf[Long]
   }
 
-  /** Writes the manifest. The build path passes everything precomputed
-    * (observations + accumulators ⇒ ZERO jobs); Maintenance callers omit
-    * them and pay the recompute scans (non-critical paths).
+  /** Partition metas from per-cluster doc counts and encode stats; the
+    * entries of one cluster (from several tasks, batches or a
+    * maintenance delta) are summed. Lists only clusters holding docs.
     */
-  def writeManifest(spark: SparkSession, indexDir: String,
-      numDocs: Long, avgdl: Double, lineageName: String,
-      granuleWindow: Long,
-      distanceName: String,
-      vocabOpt: Option[Long] = None,
-      docCountsOpt: Option[Map[Int, Long]] = None,
-      clusterStatsOpt: Option[Map[Int, ClusterStat]] = None,
-      coarseGraphOpt: Option[(Array[Array[Int]],
-        Array[Array[Array[Int]]])] = None): Unit = {
-    val vocab = vocabOpt.getOrElse(
-      IndexSchemas.readDictionary(spark, indexDir).count())
-    val centroids = loadCentroids(indexDir)
-    // one graph build, both regimes (exact kNN edges below ExactKnnMax,
-    // layered incremental insert above — level 0 + upper layers), under
-    // the index's own coarse metric so the sub-linear probe works for
-    // any Dc (the reference's HierarchicalNSW carries D the same way,
-    // /root/reference/src/coarsequantizers.jl:59-60) [VERDICT r3].
-    // The build path hands it in precomputed (overlapped with the
-    // dictionary job); Maintenance callers pay it here.
-    val coarseGraph = coarseGraphOpt.getOrElse(
-      graft.cluster.GraphCoarseSearch.buildGraph(centroids,
-        metric = graft.cluster.Distance.byName(distanceName)))
-    val blockStats: Map[Int, ClusterStat] = clusterStatsOpt.getOrElse {
-      IndexSchemas.readPostings(spark, indexDir)
-        .groupBy("cluster_id")
-        .agg(
-          sum(col("count")).as("postings"),
-          count(lit(1)).as("blocks"),
-          sum(length(col("doc_gaps")) + length(col("tfs")) +
-            length(col("dls")) + length(col("positions"))).as("bytes"))
-        .collect()
-        .map(r => r.getInt(0) ->
-          ClusterStat(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
-            build_millis = 0L)).toMap
-    }
-    val docCounts = docCountsOpt.getOrElse {
-      IndexSchemas.readDocstore(spark, indexDir)
-        .groupBy("cluster_id").count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    }
-
-    val parts = docCounts.keys.toSeq.sorted.map { cid =>
-      val cs = blockStats.getOrElse(cid, ClusterStat(cid, 0L, 0L, 0L, 0L))
-      PartitionMeta(cid, docCounts(cid), cs.num_postings, cs.num_blocks,
-        cs.bytes,
-        build_millis = cs.build_millis,
-        postings_per_sec =
-          if (cs.build_millis > 0) cs.num_postings * 1000.0 / cs.build_millis
-          else 0.0,
+  def partitionMetas(docCounts: Seq[(Int, Long)],
+      stats: Seq[ClusterStat]): Seq[PartitionMeta] = {
+    val docs = docCounts.groupMapReduce(_._1)(_._2)(_ + _)
+    val byCluster = stats.groupBy(_.cluster_id)
+    docs.filter(_._2 > 0).keys.toSeq.sorted.map { cid =>
+      val cs = byCluster.getOrElse(cid, Nil)
+      val postings = cs.map(_.num_postings).sum
+      val bytes = cs.map(_.bytes).sum
+      val millis = cs.map(_.build_millis).sum
+      PartitionMeta(cid, docs(cid), postings, cs.map(_.num_blocks).sum, bytes,
+        build_millis = millis,
+        postings_per_sec = if (millis > 0) postings * 1000.0 / millis else 0.0,
         bytes_per_posting =
-          if (cs.num_postings > 0) cs.bytes.toDouble / cs.num_postings
-          else 0.0)
+          if (postings > 0) bytes.toDouble / postings else 0.0)
     }
+  }
 
-    val manifest = IndexManifest(
+  /** The manifest step: assembled from the build state and the coarse
+    * graph alone — no scans, no jobs.
+    */
+  private def writeManifest(indexDir: String, state: BuildState,
+      lineageName: String, distanceName: String,
+      coarseGraph: (Array[Array[Int]], Array[Array[Array[Int]]])): Unit =
+    ManifestIO.write(s"$indexDir/manifest.json", IndexManifest(
       version = FormatVersion,
-      num_docs = numDocs,
-      avgdl = avgdl,
-      vocab_size = vocab,
-      kc = centroids.length,
+      num_docs = state.docstore.num_docs,
+      avgdl = state.avgdl,
+      vocab_size = state.vocab_size,
+      kc = state.centroids.length,
       feature_dim = CoarseClusterer.Dim,
       k1 = Bm25.K1,
       b = Bm25.B,
       round_scale = Bm25.Scale,
       distance = distanceName,
-      granule_window = granuleWindow,
-      centroids = centroids,
+      granule_window = state.granule_window,
+      centroids = state.centroids,
       coarse_graph = coarseGraph._1,
       coarse_graph_upper = coarseGraph._2,
-      coarse_graph_metric = distanceName,
-      lineage = InputLineage(lineageName, numDocs),
-      partitions = parts,
-      segments = loadSegments(indexDir))
-    ManifestIO.write(s"$indexDir/manifest.json", manifest)
-  }
+      lineage = InputLineage(lineageName, state.docstore.num_docs),
+      partitions = partitionMetas(state.docstore.perCluster,
+        state.cluster_stats),
+      segments = state.segments))
 
-  /** Corpus stats observed once on the docstore write job (exact Long
-    * sum → deterministic avgdl) and reused by every later step.
-    * `granule_window` fixes the (cluster, doc_id div W) granule scheme
-    * for the whole index lifetime — appends reuse it so query-side
-    * granule splits stay valid across segments.
+  /** The build's one checkpoint file, `_checkpoints/buildstate.json`:
+    * what the finished steps observed, reloaded by each later step and
+    * by a resumed build. The docstore write observation (exact Long
+    * Σ doc_len → deterministic avgdl), granule window and centroids
+    * come from the docstore step (`granule_window` fixes the (cluster,
+    * doc_id div W) granule scheme for the index's lifetime); cluster
+    * stats and segments from the finished postings batches;
+    * `vocab_size` from the dictionary step (−1 before it).
     */
-  case class CorpusStats(num_docs: Long, sum_dl: Long,
-      granule_window: Long) {
-    def avgdl: Double = sum_dl.toDouble / num_docs
+  case class BuildState(
+      docstore: DocstoreWrite,
+      granule_window: Long,
+      centroids: Array[Array[Double]],
+      cluster_stats: Seq[ClusterStat],
+      segments: Seq[SegmentMeta],
+      vocab_size: Long) {
+    def avgdl: Double = docstore.sum_dl.toDouble / docstore.num_docs
   }
 
-  private def saveStats(indexDir: String, s: CorpusStats): Unit = {
-    val p = Paths.get(indexDir, "_checkpoints", "stats.json")
-    Files.createDirectories(p.getParent)
-    Files.write(p, mapper.writeValueAsBytes(s))
-  }
+  private def statePath(indexDir: String) =
+    Paths.get(indexDir, "_checkpoints", "buildstate.json")
 
-  /** Maintenance hooks (segment merge refreshes these). */
-  def saveStatsPublic(indexDir: String, s: CorpusStats): Unit =
-    saveStats(indexDir, s)
+  private def saveState(indexDir: String, s: BuildState): Unit =
+    JsonFiles.write(statePath(indexDir), s)
 
-  def replaceSegments(indexDir: String, segs: Seq[SegmentMeta]): Unit =
-    saveSegments(indexDir, segs)
-
-  def loadStats(indexDir: String): CorpusStats =
-    mapper.readValue(
-      Files.readAllBytes(Paths.get(indexDir, "_checkpoints", "stats.json")),
-      classOf[CorpusStats])
-
-  private def saveDocCounts(indexDir: String, m: Map[Int, Long]): Unit = {
-    val p = Paths.get(indexDir, "_checkpoints", "doccounts.json")
-    Files.createDirectories(p.getParent)
-    Files.write(p, mapper.writeValueAsBytes(
-      m.toSeq.sortBy(_._1).map { case (k, v) => Array(k.toLong, v) }.toArray))
-  }
-
-  def loadDocCounts(indexDir: String): Option[Map[Int, Long]] = {
-    val p = Paths.get(indexDir, "_checkpoints", "doccounts.json")
-    if (!Files.exists(p)) None
-    else Some(mapper.readValue(Files.readAllBytes(p),
-      classOf[Array[Array[Long]]])
-      .map(a => a(0).toInt -> a(1)).toMap)
-  }
-
-  private def saveVocab(indexDir: String, vocab: Long): Unit = {
-    val p = Paths.get(indexDir, "_checkpoints", "vocab.json")
-    Files.createDirectories(p.getParent)
-    Files.write(p, mapper.writeValueAsBytes(vocab))
-  }
-
-  def loadVocab(indexDir: String): Option[Long] = {
-    val p = Paths.get(indexDir, "_checkpoints", "vocab.json")
-    if (!Files.exists(p)) None
-    else Some(mapper.readValue(Files.readAllBytes(p), classOf[Long]))
-  }
-
-  /** Per-batch cluster encode stats (a rerun batch overwrites its own
-    * file; clusters never span batches, so merging = concatenation).
-    */
-  private def saveClusterStats(indexDir: String, batch: Int,
-      stats: Seq[ClusterStat]): Unit = {
-    val p = Paths.get(indexDir, "_checkpoints", s"clusterstats_batch_$batch.json")
-    Files.createDirectories(p.getParent)
-    Files.write(p, mapper.writeValueAsBytes(stats.toArray))
-  }
-
-  def loadAllClusterStats(indexDir: String): Map[Int, ClusterStat] = {
-    val dir = Paths.get(indexDir, "_checkpoints").toFile
-    if (!dir.isDirectory) Map.empty
-    else dir.listFiles()
-      .filter(_.getName.startsWith("clusterstats_batch_"))
-      .sortBy(_.getName)
-      .flatMap(f => mapper.readValue(Files.readAllBytes(f.toPath),
-        classOf[Array[ClusterStat]]))
-      .groupBy(_.cluster_id)
-      .map { case (cid, cs) =>
-        cid -> ClusterStat(cid,
-          cs.map(_.num_postings).sum, cs.map(_.num_blocks).sum,
-          cs.map(_.bytes).sum, cs.map(_.build_millis).sum)
-      }
-  }
-
-  private def saveCentroids(indexDir: String, c: Array[Array[Double]]): Unit = {
-    val p = Paths.get(indexDir, "_checkpoints", "centroids.json")
-    Files.createDirectories(p.getParent)
-    Files.write(p, mapper.writeValueAsBytes(c))
-  }
-
-  def loadCentroids(indexDir: String): Array[Array[Double]] =
-    mapper.readValue(
-      Files.readAllBytes(Paths.get(indexDir, "_checkpoints", "centroids.json")),
-      classOf[Array[Array[Double]]])
-
-  private def saveSegments(indexDir: String, segs: Seq[SegmentMeta]): Unit = {
-    val p = Paths.get(indexDir, "_checkpoints", "segments.json")
-    Files.createDirectories(p.getParent)
-    Files.write(p, mapper.writeValueAsBytes(segs.toArray))
-  }
-
-  /** Merge new segment metas into the checkpoint: a (re-)run batch
-    * replaces its ENTIRE segment-id range [from, until). Public because
-    * Maintenance.append records its mini-segments the same way.
-    */
-  def appendSegments(indexDir: String, segs: Seq[SegmentMeta],
-      from: Int, until: Int): Unit = {
-    val merged = (loadSegments(indexDir)
-      .filterNot(s => s.segment_id >= from && s.segment_id < until)
-      ++ segs).sortBy(_.segment_id)
-    saveSegments(indexDir, merged)
-  }
-
-  private def loadSegments(indexDir: String): Seq[SegmentMeta] = {
-    val p = Paths.get(indexDir, "_checkpoints", "segments.json")
-    if (!Files.exists(p)) Seq.empty
-    else mapper.readValue(Files.readAllBytes(p),
-      classOf[Array[SegmentMeta]]).toSeq
-  }
+  private def loadState(indexDir: String): BuildState =
+    JsonFiles.read(statePath(indexDir), classOf[BuildState])
 }

@@ -47,15 +47,4 @@ object Indexes {
         IndexBuilder.BuildConfig(resume = true))
       dir
     })
-
-  /** Force a fresh, non-resumed build into a new directory (bench path —
-    * measures true build throughput). Returns (indexDir, result).
-    */
-  def freshBuild(spark: SparkSession, sfDir: String): (String, IndexBuilder.BuildResult) = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-index-bench").toString
-    val res = IndexBuilder.build(spark, sfDir, dir,
-      IndexBuilder.BuildConfig(resume = false))
-    (dir, res)
-  }
 }

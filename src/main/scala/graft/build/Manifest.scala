@@ -1,7 +1,7 @@
 package graft.build
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
@@ -44,6 +44,8 @@ case class InputLineage(
   * per-partition/per-segment lineage + metrics. Parquet segments +
   * this JSON manifest emulate an Iceberg snapshot (no Iceberg jar in
   * /opt/spark/jars — documented in SURVEY.md §7.0).
+  * It is the built index's whole state: every maintenance operation
+  * reads it, applies the deltas it observed and writes it back.
   */
 case class IndexManifest(
     version: Int,
@@ -66,33 +68,48 @@ case class IndexManifest(
     centroids: Array[Array[Double]],
     // P2 graft (/root/reference/src/persistency.jl:163-241): the coarse
     // quantizer's kNN graph adjacency, serialized with the index and
-    // reloaded at open instead of rebuilt
+    // reloaded at open instead of rebuilt; built under `distance`
     coarse_graph: Array[Array[Int]],
     // upper HNSW layers (index 0 = level 1) — nonempty only beyond
     // GraphCoarseSearch.ExactKnnMax, where the layered incremental
     // build replaces the exact kNN edges (r3; the reference's
     // HierarchicalNSW layers, /root/reference/src/coarsequantizers.jl:58)
     coarse_graph_upper: Array[Array[Array[Int]]],
-    // metric the persisted graph's edges were built under [ADVICE r4];
-    // always equal to `distance`
-    coarse_graph_metric: String,
     lineage: InputLineage,
     partitions: Seq[PartitionMeta],
     segments: Seq[SegmentMeta])
 
-object ManifestIO {
-  private val mapper = new ObjectMapper()
-  mapper.registerModule(DefaultScalaModule)
-  mapper.configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, false)
+/** The one JSON mapper for graft's metadata files (manifest, build
+  * state, tombstones, stream sidecars) and the one atomic write: a
+  * reader sees the old file or the new one, never a torn one.
+  */
+object JsonFiles {
+  val mapper: ObjectMapper = new ObjectMapper()
+    .registerModule(DefaultScalaModule)
+    .configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, false)
 
-  def write(path: String, m: IndexManifest): Unit = {
-    val tmp = Paths.get(path + ".tmp")
-    Files.createDirectories(tmp.getParent)
-    Files.write(tmp, mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(m))
-    Files.move(tmp, Paths.get(path), StandardCopyOption.ATOMIC_MOVE,
+  /** Writes `bytes` to a sibling `.tmp` file, then renames it over `path`. */
+  def writeAtomic(path: Path, bytes: Array[Byte]): Unit = {
+    val tmp = path.resolveSibling(s"${path.getFileName}.tmp")
+    Files.createDirectories(tmp.toAbsolutePath.getParent)
+    Files.write(tmp, bytes)
+    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
+
+  def write(path: Path, value: Any): Unit =
+    writeAtomic(path, mapper.writeValueAsBytes(value))
+
+  def read[T](path: Path, cls: Class[T]): T =
+    mapper.readValue(Files.readAllBytes(path), cls)
+}
+
+object ManifestIO {
+  import JsonFiles.mapper
+
+  def write(path: String, m: IndexManifest): Unit =
+    JsonFiles.writeAtomic(Paths.get(path),
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(m))
 
   /** Reads a manifest written by this code's format version; any other
     * version fails with a "rebuild the index" error instead of being

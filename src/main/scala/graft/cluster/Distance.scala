@@ -26,8 +26,7 @@ object Distance {
   /** Strict resolution: an unknown metric name must FAIL, not silently
     * fall back to SqEuclidean — a third metric's index would otherwise
     * cluster docs under its own metric but rank centroid probes under
-    * SqEuclidean, degrading w<kc recall with no error (the silent-
-    * mismatch class the coarse_graph_metric stamp exists to prevent).
+    * SqEuclidean, degrading w<kc recall with no error.
     */
   def byName(s: String): Distance = s match {
     case "cosine" => Cosine

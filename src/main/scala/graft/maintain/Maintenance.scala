@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.build.{IndexBuilder, ManifestIO}
+import graft.build.{ClusterStat, IndexBuilder, JsonFiles, ManifestIO}
 import graft.cluster.CoarseClusterer
 import graft.sources.Corpus
 
@@ -16,10 +16,11 @@ import graft.sources.Corpus
   *    docIDs continue from num_docs (insertion order, exactly
   *    `id = nvectors` at /root/reference/src/utils.jl:140-143), blocks
   *    are appended under the existing cluster partitioning, the
-  *    dictionary/idf refresh from block metadata. The scoring avgdl is
-  *    intentionally HELD at its last full-build value until compaction
-  *    (stored g-maxes stay valid upper bounds; Lucene holds norms the
-  *    same way).
+  *    dictionary/idf refresh from block metadata, and the manifest
+  *    gains the doc counts and block stats the append observed. The
+  *    scoring avgdl is intentionally HELD at its last full-build value
+  *    until compaction (stored g-maxes stay valid upper bounds; Lucene
+  *    holds norms the same way).
   *  - [[delete]]  = `delete_from_index!` (M5): a tombstone set — O(1)
   *    visibility-only delete; queries filter tombstoned docs before
   *    top-k selection.
@@ -37,23 +38,16 @@ object Maintenance {
   private def tombstonePath(indexDir: String) =
     Paths.get(indexDir, "tombstones.json")
 
-  private val mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(new com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    m
-  }
-
   def loadTombstones(indexDir: String): Set[Long] = {
     val p = tombstonePath(indexDir)
     if (!Files.exists(p)) Set.empty
-    else mapper.readValue(Files.readAllBytes(p), classOf[Array[Long]]).toSet
+    else JsonFiles.read(p, classOf[Array[Long]]).toSet
   }
 
   /** M5: tombstone docIDs (idempotent, merges with existing). */
-  def delete(indexDir: String, docIds: Seq[Long]): Unit = {
-    val merged = (loadTombstones(indexDir) ++ docIds).toArray.sorted
-    Files.write(tombstonePath(indexDir), mapper.writeValueAsBytes(merged))
-  }
+  def delete(indexDir: String, docIds: Seq[Long]): Unit =
+    JsonFiles.write(tombstonePath(indexDir),
+      (loadTombstones(indexDir) ++ docIds).toArray.sorted)
 
   /** M1: append an F1-shaped batch of new source files as a mini-segment.
     * New docIDs = num_docs + rank within the batch by (repo,path,commit).
@@ -76,8 +70,9 @@ object Maintenance {
       idOffset = manifest.num_docs)
     val docs = CoarseClusterer.withClusterId(dense.df, centroids,
       graft.cluster.Distance.byName(manifest.distance))
+    val (observed, written) = IndexBuilder.observeDocstore(docs, manifest.kc)
 
-    docs
+    observed
       .repartition(spark.sessionState.conf.numShufflePartitions,
         col("cluster_id"), expr(s"doc_id div $window"))
       .sortWithinPartitions(col("cluster_id"), col("doc_id"))
@@ -86,29 +81,32 @@ object Maintenance {
       .parquet(s"$indexDir/docstore")
 
     val segOffset = (manifest.segments.map(_.segment_id) :+ 0).max + 1
-    val (blocks, acc, _) =
+    val (blocks, acc, cacc) =
       IndexBuilder.encodeBlocks(spark, docs, avgdl, segOffset, window,
         exchange = true)
     blocks.write.mode("append")
       .partitionBy("cluster_id")
       .parquet(s"$indexDir/postings")
-    // record the mini-segments' lineage like the build path does
-    // [ADVICE r1: the accumulator was discarded, leaving manifest
-    // .segments stale and later appends reusing the same segOffset]
-    val segs = {
-      import scala.jdk.CollectionConverters._
-      acc.value.asScala.toSeq.sortBy(_.segment_id)
-    }
-    IndexBuilder.appendSegments(indexDir, segs, segOffset,
-      segOffset + 10000)
-
-    val added = dense.numRows
     dense.unpersist()
-    val nNew = manifest.num_docs + added
-    IndexBuilder.writeDictionary(spark, indexDir, nNew)
-    IndexBuilder.writeManifest(spark, indexDir, nNew, avgdl,
-      manifest.lineage.source_dir, granuleWindow = manifest.granule_window,
-      distanceName = manifest.distance)
+
+    // the manifest gains what the two writes observed: doc counts from
+    // the docstore write, block stats and the mini-segments' lineage
+    // from the encode accumulators [ADVICE r1: a discarded accumulator
+    // left manifest.segments stale and later appends reusing the same
+    // segOffset]. Centroids and the coarse graph carry over unchanged.
+    val added = written()
+    val nNew = manifest.num_docs + added.num_docs
+    ManifestIO.write(s"$indexDir/manifest.json", manifest.copy(
+      num_docs = nNew,
+      vocab_size = IndexBuilder.writeDictionary(spark, indexDir, nNew),
+      partitions = IndexBuilder.partitionMetas(
+        manifest.partitions.map(p => p.cluster_id -> p.num_docs) ++
+          added.perCluster,
+        manifest.partitions.map(p => ClusterStat(p.cluster_id,
+          p.num_postings, p.num_blocks, p.bytes, p.build_millis)) ++
+          IndexBuilder.collected(cacc)),
+      segments = (manifest.segments ++ IndexBuilder.collected(acc))
+        .sortBy(_.segment_id)))
   }
 
   /** Segment merge (north_star: "merge partition-local segments into a
@@ -117,6 +115,8 @@ object Maintenance {
     * (cluster, term), WITHOUT touching the docstore or docIDs. Also
     * refreshes avgdl/idf exactly over the current corpus (append holds
     * them stale by design). One postings-only job: no tokenize pass.
+    * The manifest gets the merge kernel's segments and per-cluster
+    * block stats; doc counts, centroids and the graph carry over.
     */
   def mergeSegments(spark: SparkSession, indexDir: String): Unit = {
     import spark.implicits._
@@ -138,8 +138,7 @@ object Maintenance {
     val sumDl = statsRow.getLong(1)
     val avgdl = sumDl.toDouble / n
 
-    val acc = spark.sparkContext
-      .collectionAccumulator[graft.build.SegmentMeta]("merged-segments")
+    val (acc, cacc) = IndexBuilder.encodeAccumulators(spark)
 
     // the shuffle SORTS runs into (cluster, granule, term, first_doc)
     // order, so the consolidator streams one grouped run at a time —
@@ -152,10 +151,7 @@ object Maintenance {
         expr(s"first_doc div $window"), col("term"), col("first_doc"))
       .mapPartitions { it =>
         val segId = org.apache.spark.TaskContext.getPartitionId()
-        val tStart = System.nanoTime()
-        var nPostings = 0L
-        var nBlocks = 0L
-        var nBytes = 0L
+        val tally = new IndexBuilder.EncodeTally(segId)
         var done = false
         val runs = new Iterator[Seq[PostingBlock]] {
           private val buf = it.buffered
@@ -174,24 +170,20 @@ object Maintenance {
         val out = runs.flatMap { bs =>
           // runs within a granule are disjoint doc ranges, pre-sorted
           // by first_doc: decode, concat, re-encode as full blocks
+          val f0 = System.nanoTime()
           val entries = bs.flatMap(PostingCodec.decodeEntries)
           val blocks = PostingCodec.encodeTerm(bs.head.term,
             bs.head.cluster_id, segId,
             entries, (tf, dl) => Bm25.g(tf, dl, avgdl))
-          nPostings += entries.size
-          blocks.foreach { b =>
-            nBlocks += 1; nBytes += PostingCodec.storedBytes(b)
-          }
+          tally.add(bs.head.cluster_id, entries.size, blocks,
+            System.nanoTime() - f0)
           blocks
         }
         out ++ {
           // accumulator flush after the stream is fully consumed
           if (!done) {
             done = true
-            val millis = math.max(1L, (System.nanoTime() - tStart) / 1000000L)
-            if (nPostings > 0) acc.add(graft.build.SegmentMeta(
-              segId, nPostings, nBlocks, nBytes, millis,
-              nPostings * 1000.0 / millis, nBytes.toDouble / nPostings))
+            tally.report(acc, cacc)
           }
           Iterator.empty
         }
@@ -209,21 +201,14 @@ object Maintenance {
     Files.move(Paths.get(tmp), old)
     org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
 
-    // refreshed stats/segments/dictionary/manifest
-    val segs = {
-      import scala.jdk.CollectionConverters._
-      acc.value.asScala.toSeq.sortBy(_.segment_id)
-    }
-    IndexBuilder.replaceSegments(indexDir, segs)
-    // preserve the granule window: the stats.json checkpoint must agree
-    // with the manifest [ADVICE r2]
-    IndexBuilder.saveStatsPublic(indexDir,
-      IndexBuilder.CorpusStats(n, sumDl, manifest0.granule_window))
-    IndexBuilder.writeDictionary(spark, indexDir, n)
-    IndexBuilder.writeManifest(spark, indexDir, n, avgdl,
-      manifest0.lineage.source_dir,
-      granuleWindow = manifest0.granule_window,
-      distanceName = manifest0.distance)
+    ManifestIO.write(s"$indexDir/manifest.json", manifest0.copy(
+      num_docs = n,
+      avgdl = avgdl,
+      vocab_size = IndexBuilder.writeDictionary(spark, indexDir, n),
+      partitions = IndexBuilder.partitionMetas(
+        manifest0.partitions.map(p => p.cluster_id -> p.num_docs),
+        IndexBuilder.collected(cacc)),
+      segments = IndexBuilder.collected(acc).sortBy(_.segment_id)))
   }
 
   /** M5/M8 compaction: survivors re-ranked dense in OLD-id order into a

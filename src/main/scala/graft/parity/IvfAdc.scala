@@ -39,23 +39,17 @@ object IvfAdc {
       dist: String,
       rotation: Array[Array[Double]]) // null = no rotation (:pq)
 
-  private val mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(new com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    m
-  }
-
   def save(path: String, model: Model): Unit = {
     val cb = model.codebooks
     val dto = ModelDto(model.kc, model.centroids, cb.m, cb.k, cb.subLen,
       cb.books, graft.cluster.Distance.name(cb.dist),
       cb.rotation.orNull)
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      mapper.writeValueAsBytes(dto))
+      graft.build.JsonFiles.mapper.writeValueAsBytes(dto))
   }
 
   def load(path: String): Model = {
-    val dto = mapper.readValue(
+    val dto = graft.build.JsonFiles.mapper.readValue(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
       classOf[ModelDto])
     Model(dto.kc, dto.centroids,

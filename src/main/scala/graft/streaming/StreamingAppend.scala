@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.build.{IndexBuilder, ManifestIO}
+import graft.build.{IndexBuilder, IndexManifest, JsonFiles, ManifestIO}
 import graft.maintain.Maintenance
 
 /** Structured Streaming ingestion: F1-shaped files landing in a
@@ -20,14 +20,16 @@ import graft.maintain.Maintenance
   *
   * Delivery semantics: foreachBatch is AT-LEAST-once, and
   * Maintenance.append is a non-atomic multi-step sequence (docstore,
-  * postings, segments, dictionary, manifest) — so the sink records an
-  * INTENT sidecar (batchId + pre-append doc/segment watermarks) before
-  * appending and the applied batchId after. On replay:
+  * postings, dictionary, manifest) — so the sink records an INTENT
+  * sidecar (batchId + the pre-append manifest) before appending and the
+  * applied batchId after. On replay:
   *  - batchId <= lastApplied → skip (the common duplicate-delivery case);
   *  - a dangling intent (crash mid-append or between append and the
-  *    applied record) → [[rollbackPartial]] restores the pre-append
-  *    state from the watermarks (doc_id / segment_id range filters —
-  *    both monotone counters), then the batch re-applies cleanly.
+  *    applied record) → [[rollbackPartial]] cuts the docstore and the
+  *    postings back to the pre-append manifest's doc/segment watermarks
+  *    (range filters — both are monotone counters), restores that
+  *    manifest and rewrites the dictionary; then the batch re-applies
+  *    cleanly.
   * Net effect: effectively-once INDEXED STATE, achieved by
   * at-least-once delivery + deterministic rollback-and-reapply — not by
   * any atomicity claim about append itself [ADVICE r2].
@@ -40,16 +42,14 @@ object StreamingAppend {
   private def intentPath(indexDir: String) =
     java.nio.file.Paths.get(indexDir, "stream_intent.json")
 
-  private val mapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m.registerModule(new com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    m
-  }
-
-  /** Pre-append watermarks: everything the batch adds lies strictly
-    * above them (doc ids and segment ids are monotone counters).
+  /** The batch about to be appended and the manifest before it.
+    * Everything the batch adds lies strictly above the manifest's
+    * watermarks (doc ids and segment ids are monotone counters).
     */
-  final case class Intent(batchId: Long, numDocsBefore: Long, maxSegBefore: Int)
+  final case class Intent(batchId: Long, before: IndexManifest) {
+    def numDocsBefore: Long = before.num_docs
+    def maxSegBefore: Int = (before.segments.map(_.segment_id) :+ 0).max
+  }
 
   /** Last batchId applied to this index (−1 if none). */
   def lastAppliedBatch(indexDir: String): Long = {
@@ -58,38 +58,27 @@ object StreamingAppend {
     else new String(java.nio.file.Files.readAllBytes(p)).trim.toLong
   }
 
-  private def recordApplied(indexDir: String, batchId: Long): Unit = {
-    val tmp = java.nio.file.Paths.get(
-      appliedPath(indexDir).toString + ".tmp")
-    java.nio.file.Files.write(tmp, batchId.toString.getBytes)
-    java.nio.file.Files.move(tmp, appliedPath(indexDir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def recordApplied(indexDir: String, batchId: Long): Unit =
+    JsonFiles.write(appliedPath(indexDir), batchId)
 
   def pendingIntent(indexDir: String): Option[Intent] = {
     val p = intentPath(indexDir)
     if (!java.nio.file.Files.exists(p)) None
-    else Some(mapper.readValue(java.nio.file.Files.readAllBytes(p),
-      classOf[Intent]))
+    else Some(JsonFiles.read(p, classOf[Intent]))
   }
 
-  private def recordIntent(indexDir: String, i: Intent): Unit = {
-    val tmp = java.nio.file.Paths.get(intentPath(indexDir).toString + ".tmp")
-    java.nio.file.Files.write(tmp, mapper.writeValueAsBytes(i))
-    java.nio.file.Files.move(tmp, intentPath(indexDir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def recordIntent(indexDir: String, i: Intent): Unit =
+    JsonFiles.write(intentPath(indexDir), i)
 
   private def clearIntent(indexDir: String): Unit =
     java.nio.file.Files.deleteIfExists(intentPath(indexDir))
 
   /** Removes every trace of a partially-applied append: docstore rows
-    * above the doc watermark, posting blocks above the segment
-    * watermark, their segment metas, then dictionary + manifest are
-    * rebuilt for the restored corpus. Idempotent (pure range filters),
-    * so a crash mid-rollback just rolls back again.
+    * above the doc watermark and posting blocks above the segment
+    * watermark go, the pre-append manifest is restored and the
+    * dictionary rewritten for the restored postings. Idempotent (pure
+    * range filters, a fixed manifest), so a crash mid-rollback just
+    * rolls back again.
     */
   def rollbackPartial(spark: SparkSession, indexDir: String, intent: Intent): Unit = {
     System.err.println(s"[stream] rolling back partial batch " +
@@ -117,16 +106,8 @@ object StreamingAppend {
     }
     rewrite("docstore", _.filter(col("doc_id") < intent.numDocsBefore))
     rewrite("postings", _.filter(col("segment_id") <= intent.maxSegBefore))
-    // drop the partial batch's segment metas: replace the whole range
-    // above the watermark with nothing
-    IndexBuilder.appendSegments(indexDir, Seq.empty,
-      intent.maxSegBefore + 1, Int.MaxValue)
-    val manifest = ManifestIO.read(s"$indexDir/manifest.json")
     IndexBuilder.writeDictionary(spark, indexDir, intent.numDocsBefore)
-    IndexBuilder.writeManifest(spark, indexDir, intent.numDocsBefore,
-      manifest.avgdl, manifest.lineage.source_dir,
-      granuleWindow = manifest.granule_window,
-      distanceName = manifest.distance)
+    ManifestIO.write(s"$indexDir/manifest.json", intent.before)
   }
 
   /** Idempotent micro-batch application; returns true iff the batch was
@@ -154,9 +135,8 @@ object StreamingAppend {
       // restore the pre-append state before re-applying
       pendingIntent(indexDir).foreach(rollbackPartial(spark, indexDir, _))
       if (!batch.isEmpty) {
-        val manifest = ManifestIO.read(s"$indexDir/manifest.json")
-        recordIntent(indexDir, Intent(batchId, manifest.num_docs,
-          (manifest.segments.map(_.segment_id) :+ 0).max))
+        recordIntent(indexDir,
+          Intent(batchId, ManifestIO.read(s"$indexDir/manifest.json")))
         Maintenance.append(spark, indexDir, batch)
       }
       recordApplied(indexDir, batchId)

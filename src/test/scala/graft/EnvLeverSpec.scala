@@ -7,26 +7,37 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps environment-switched code paths out of the engine: every build,
+/** Source-scan guards on the engine's shape.
+  *
+  * Keeps environment-switched code paths out of the engine: every build,
   * query and maintenance step has one path, chosen in code. The only
   * environment reads allowed are the bench/verify mains' own settings
   * and `Indexes.scratchBase` (GRAFT_SCRATCH_DIR, a deployment path that
   * changes where an index lives, never how it is built).
+  *
+  * Keeps the build checkpoint layout in one module: `_checkpoints/` is
+  * the build's scratch, and a built index's state is its manifest.
   */
 class EnvLeverSpec extends AnyFunSuite {
 
-  test("no environment reads in src/main/scala outside Bench, Verify and Indexes.scratchBase") {
+  private lazy val files: Seq[Path] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val files = Files.walk(root).iterator().asScala
+    val fs = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.size > 30, s"only ${files.size} sources under $root")
+    assert(fs.size > 30, s"only ${fs.size} sources under $root")
+    fs
+  }
+
+  /** (line number, trimmed line) of every line of `f` matching `re`. */
+  private def matching(f: Path, re: scala.util.matching.Regex): Seq[(Int, String)] =
+    new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
+      .split("\n").toSeq.zipWithIndex
+      .collect { case (l, i) if re.findFirstIn(l).nonEmpty => (i + 1, l.trim) }
+
+  test("no environment reads in src/main/scala outside Bench, Verify and Indexes.scratchBase") {
     val envRead = """sys\.env|System\.getenv""".r
-    def reads(f: Path): Seq[(Int, String)] =
-      new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
-        .split("\n").toSeq.zipWithIndex
-        .collect { case (l, i) if envRead.findFirstIn(l).nonEmpty =>
-          (i + 1, l.trim) }
+    def reads(f: Path): Seq[(Int, String)] = matching(f, envRead)
     val exempt = Set("Bench.scala", "Verify.scala")
     val offenders = files
       .filterNot(f => exempt(f.getFileName.toString))
@@ -39,5 +50,15 @@ class EnvLeverSpec extends AnyFunSuite {
     val idx = reads(indexes.head)
     assert(idx.size == 1 && idx.head._2.contains("\"GRAFT_SCRATCH_DIR\""),
       idx.mkString("\n"))
+  }
+
+  test("_checkpoints appears in src/main/scala only in IndexBuilder.scala") {
+    val offenders = files
+      .filterNot(_.getFileName.toString == "IndexBuilder.scala")
+      .flatMap(f => matching(f, "_checkpoints".r)
+        .map { case (n, l) => s"$f:$n: $l" })
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    assert(files.exists(f => f.getFileName.toString == "IndexBuilder.scala" &&
+      matching(f, "_checkpoints".r).nonEmpty))
   }
 }

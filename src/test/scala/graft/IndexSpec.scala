@@ -72,6 +72,7 @@ class IndexSpec extends SparkSpec {
       IndexBuilder.BuildConfig(kc = 8, resume = false, postingsBatches = 4))
     val before = IndexSearcher.topK(spark, dir, QuerySet.queries.take(5), 10)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    val partsBefore = ManifestIO.read(s"$dir/manifest.json").partitions
 
     // simulate a crash mid-postings: batch 1 (clusters 2,3) incomplete
     Files.delete(java.nio.file.Paths.get(dir, "_checkpoints", "postings.done"))
@@ -91,6 +92,22 @@ class IndexSpec extends SparkSpec {
     val after = IndexSearcher.topK(spark, dir, QuerySet.queries.take(5), 10)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     assert(after.toSeq == before.toSeq)
+
+    // reassemble the manifest from the build state the resumed build
+    // left: the skipped batches' cluster stats must still be there
+    // (bit-identical, encode timings included); the rebuilt batch's
+    // clusters get identical counts and fresh timings
+    assert(ManifestIO.read(s"$dir/manifest.json").partitions == partsBefore)
+    Files.delete(java.nio.file.Paths.get(dir, "_checkpoints", "manifest.done"))
+    val res2 = IndexBuilder.build(spark, sf0001, dir,
+      IndexBuilder.BuildConfig(kc = 8, resume = true, postingsBatches = 4))
+    assert(res2.stepsRun == Seq("manifest"))
+    val partsAfter = ManifestIO.read(s"$dir/manifest.json").partitions
+    def counts(ps: Seq[graft.model.PartitionMeta]) = ps.map(p =>
+      (p.cluster_id, p.num_docs, p.num_postings, p.num_blocks, p.bytes))
+    assert(counts(partsAfter) == counts(partsBefore))
+    assert(partsAfter.filterNot(p => Set(2, 3)(p.cluster_id)) ==
+      partsBefore.filterNot(p => Set(2, 3)(p.cluster_id)))
   }
 
   test("resume: deleting one checkpoint re-runs only that step") {

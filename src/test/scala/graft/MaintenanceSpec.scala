@@ -4,7 +4,8 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.build.{IndexBuilder, ManifestIO}
+import graft.build.{IndexBuilder, IndexSchemas, ManifestIO}
+import graft.cluster.{Distance, GraphCoarseSearch}
 import graft.maintain.Maintenance
 import graft.query.{IndexSearcher, QuerySet}
 import graft.sources.Corpus
@@ -191,5 +192,59 @@ class MaintenanceSpec extends SparkSpec {
       .map(s => java.security.MessageDigest.getInstance("SHA-256")
         .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString)
     assert(shas.toSeq == exp)
+  }
+
+  test("manifest matches disk after build, append, delete, append and merge") {
+    import spark.implicits._
+    val dir = freshIndex()
+    // the reference: what the manifest recompute scans derived from disk
+    def check(step: String): Unit = {
+      val m = ManifestIO.read(s"$dir/manifest.json")
+      val postings = IndexSchemas.readPostings(spark, dir)
+      val bytes = length(col("doc_gaps")) + length(col("tfs")) +
+        length(col("dls")) + length(col("positions"))
+      def blockStats(key: String) = postings.groupBy(key)
+        .agg(sum(col("count")), count(lit(1)), sum(bytes))
+        .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2),
+          r.getLong(3)))).toMap
+      val docs = IndexSchemas.readDocstore(spark, dir)
+        .groupBy("cluster_id").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val perCluster = blockStats("cluster_id")
+      assert(m.partitions.map(p => (p.cluster_id, p.num_docs,
+        (p.num_postings, p.num_blocks, p.bytes))) ==
+        docs.keys.toSeq.sorted.map(c =>
+          (c, docs(c), perCluster.getOrElse(c, (0L, 0L, 0L)))), step)
+      assert(m.num_docs == docs.values.sum, step)
+      assert(m.vocab_size ==
+        IndexSchemas.readDictionary(spark, dir).count(), step)
+      val perSegment = blockStats("segment_id")
+      assert(m.segments.map(s => (s.segment_id,
+        (s.num_postings, s.num_blocks, s.bytes))) ==
+        perSegment.keys.toSeq.sorted.map(s => (s, perSegment(s))), step)
+      val (edges, upper) = GraphCoarseSearch.buildGraph(m.centroids,
+        metric = Distance.byName(m.distance))
+      assert(m.coarse_graph.map(_.toSeq).toSeq ==
+        edges.map(_.toSeq).toSeq, step)
+      assert(m.coarse_graph_upper.map(_.map(_.toSeq).toSeq).toSeq ==
+        upper.map(_.map(_.toSeq).toSeq).toSeq, step)
+    }
+    def batch(tag: String) = Seq(
+      (s"repo-$tag", s"src/$tag/a.c", s"${tag}00000001", "c",
+        "quartz melody quartz dup join"),
+      (s"repo-$tag", s"src/$tag/b.c", s"${tag}00000002", "c",
+        s"melody xylophone join hash $tag"))
+      .toDF("repo", "path", "commit", "lang", "content")
+    check("build")
+    val n = ManifestIO.read(s"$dir/manifest.json").num_docs
+    Maintenance.append(spark, dir, batch("a1"))
+    check("append 1")
+    Maintenance.delete(dir, Seq(3L, n))
+    check("delete")
+    Maintenance.append(spark, dir, batch("a2"))
+    check("append 2")
+    Maintenance.mergeSegments(spark, dir)
+    check("merge")
+    assert(ManifestIO.read(s"$dir/manifest.json").num_docs == n + 4)
   }
 }

@@ -89,11 +89,10 @@ class Round3Spec extends SparkSpec {
     // simulate the crash window [ADVICE r2]: append fully applied, but
     // the applied record was never written — only the intent remains
     Maintenance.append(spark, dir, batch)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    java.nio.file.Files.write(
+    graft.build.JsonFiles.write(
       java.nio.file.Paths.get(dir, "stream_intent.json"),
-      s"""{"batchId":0,"numDocsBefore":${m0.num_docs},"maxSegBefore":$maxSeg0}"""
-        .getBytes)
+      StreamingAppend.Intent(0L, m0))
+    assert(StreamingAppend.pendingIntent(dir).get.maxSegBefore == maxSeg0)
     assert(StreamingAppend.lastAppliedBatch(dir) == -1L)
     assert(StreamingAppend.pendingIntent(dir).nonEmpty)
 
@@ -476,17 +475,27 @@ class Round3Spec extends SparkSpec {
   }
 
   // ------------------------------------------------------------------
-  // merge preserves the granule window in the stats checkpoint [ADVICE r2]
+  // merge preserves the granule window [ADVICE r2]; maintenance never
+  // touches the build's checkpoint dir
   // ------------------------------------------------------------------
 
-  test("mergeSegments keeps stats.granule_window == manifest.granule_window") {
+  test("append and merge keep manifest.granule_window and leave _checkpoints untouched") {
     val dir = Files.createTempDirectory("graft-r3-merge").toString
     IndexBuilder.build(spark, sf0001, dir,
       IndexBuilder.BuildConfig(resume = false))
+    def checkpoints(): Map[String, Seq[Byte]] = {
+      val ck = new java.io.File(s"$dir/_checkpoints")
+      ck.listFiles().map(f =>
+        f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+    }
+    val ck0 = checkpoints()
+    assert(ck0.contains("buildstate.json"))
+    val window0 = ManifestIO.read(s"$dir/manifest.json").granule_window
+    assert(window0 > 0)
     Maintenance.append(spark, dir, newBatch(3))
+    assert(checkpoints() == ck0)
     Maintenance.mergeSegments(spark, dir)
-    val m = ManifestIO.read(s"$dir/manifest.json")
-    assert(m.granule_window > 0)
-    assert(IndexBuilder.loadStats(dir).granule_window == m.granule_window)
+    assert(checkpoints() == ck0)
+    assert(ManifestIO.read(s"$dir/manifest.json").granule_window == window0)
   }
 }

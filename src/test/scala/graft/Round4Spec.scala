@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.build.{IndexBuilder, ManifestIO}
+import graft.build.{IndexBuilder, JsonFiles, ManifestIO}
 import graft.maintain.Maintenance
 import graft.streaming.StreamingAppend
 
@@ -29,17 +29,15 @@ class Round4Spec extends SparkSpec {
     IndexBuilder.build(spark, sf0001, dir,
       IndexBuilder.BuildConfig(resume = false))
     val m0 = ManifestIO.read(s"$dir/manifest.json")
-    val maxSeg0 = (m0.segments.map(_.segment_id) :+ 0).max
 
     // batch 0 fully applies and records applied…
     assert(StreamingAppend.applyBatch(dir, newBatch("a", 3), 0L))
     val m1 = ManifestIO.read(s"$dir/manifest.json")
     assert(m1.num_docs == m0.num_docs + 3)
     // …but the crash hits before clearIntent: re-create the intent that
-    // applyBatch wrote for batch 0 (pre-append watermarks)
-    Files.write(Paths.get(dir, "stream_intent.json"),
-      s"""{"batchId":0,"numDocsBefore":${m0.num_docs},"maxSegBefore":$maxSeg0}"""
-        .getBytes)
+    // applyBatch wrote for batch 0 (the pre-append manifest)
+    JsonFiles.write(Paths.get(dir, "stream_intent.json"),
+      StreamingAppend.Intent(0L, m0))
     assert(StreamingAppend.pendingIntent(dir).nonEmpty)
     assert(StreamingAppend.lastAppliedBatch(dir) == 0L)
 
@@ -54,10 +52,8 @@ class Round4Spec extends SparkSpec {
 
     // same staleness on the SKIP branch: replay of batch 1 with its
     // intent dangling must clear the intent and leave data untouched
-    val m1seg = (m2.segments.map(_.segment_id) :+ 0).max
-    Files.write(Paths.get(dir, "stream_intent.json"),
-      s"""{"batchId":1,"numDocsBefore":${m0.num_docs + 3},"maxSegBefore":$m1seg}"""
-        .getBytes)
+    JsonFiles.write(Paths.get(dir, "stream_intent.json"),
+      StreamingAppend.Intent(1L, m1))
     assert(!StreamingAppend.applyBatch(dir, newBatch("b", 2), 1L))
     assert(StreamingAppend.pendingIntent(dir).isEmpty)
     assert(ManifestIO.read(s"$dir/manifest.json").num_docs == m0.num_docs + 5)
@@ -244,11 +240,12 @@ class Round4Spec extends SparkSpec {
     IndexBuilder.build(spark, sf0001, dir,
       IndexBuilder.BuildConfig(resume = false))
     val m0 = ManifestIO.read(s"$dir/manifest.json")
-    val maxSeg0 = (m0.segments.map(_.segment_id) :+ 0).max
 
     // a partial append (docs landed, applied record missing)
     Maintenance.append(spark, dir, newBatch("c", 4))
-    val intent = StreamingAppend.Intent(0L, m0.num_docs, maxSeg0)
+    val intent = StreamingAppend.Intent(0L, m0)
+    assert(intent.numDocsBefore == m0.num_docs)
+    assert(intent.maxSegBefore == m0.segments.map(_.segment_id).max)
 
     // simulate the mid-swap crash: live docstore moved aside, rewrite
     // never installed
@@ -259,7 +256,13 @@ class Round4Spec extends SparkSpec {
     val store = spark.read.parquet(s"$dir/docstore")
     assert(store.count() == m0.num_docs) // batch gone, base corpus intact
     assert(!Files.isDirectory(Paths.get(dir, "docstore_old")))
-    assert(ManifestIO.read(s"$dir/manifest.json").num_docs == m0.num_docs)
+    // the pre-append manifest is restored, not recomputed
+    val restored = ManifestIO.read(s"$dir/manifest.json")
+    assert(restored.num_docs == m0.num_docs)
+    assert(restored.partitions == m0.partitions)
+    assert(restored.segments == m0.segments)
+    assert(restored.vocab_size == m0.vocab_size)
+    assert(spark.read.parquet(s"$dir/dictionary").count() == m0.vocab_size)
 
     // and the batch re-applies cleanly afterwards
     assert(StreamingAppend.applyBatch(dir, newBatch("c", 4), 0L))
