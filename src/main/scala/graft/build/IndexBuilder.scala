@@ -353,55 +353,9 @@ object IndexBuilder {
         }
         .groupBy(identity).map { case (g, xs) => g -> xs.length.toLong }
         .toSeq
-      val slotCol = GranulePartitioner.slotKeyCol(
-        GranulePartitioner.slotMap(weights, parts), window, parts) _
-      // fused content→features→argmin assignment, one codegen call per
-      // row with a reused feature buffer — no feat array column, no udf
-      // Seq boxing on the build's biggest stage (r3; ClusterAssignExpr).
-      // Late r3: doc_len rides the SAME scan (packed Long) — the
-      // docsFromCounted TokenCountExpr column is dropped and its
-      // second full tokenize pass pruned from this job entirely
-      // (token count == sum of feature buckets, property-tested)
-      val (clustered, written) = observeDocstore(dense.df
-        .drop("doc_len")
-        .withColumn("_cl", graft.functions.ClusterAssignExpr
-          .clusterIdAndLen(col("content"), centroids, cfg.distance))
-        .withColumn("cluster_id", shiftright(col("_cl"), 32).cast("int"))
-        .withColumn("doc_len",
-          col("_cl").bitwiseAND(lit(0xffffffffL)).cast("int"))
-        .drop("_cl"), kc)
-      // granule-slot exchange ahead of the write — the build's ONE
-      // content shuffle: each task holds a few CONTIGUOUS (cluster, doc
-      // range) slices → ~2 files per cluster instead of tasks ×
-      // clusters, each file a disjoint doc range (the invariant the
-      // zero-shuffle postings step relies on).
-      // content_sha is recomputed on the POST-exchange side: the column
-      // is derivable from content, so shipping it through the shuffle
-      // would pay 64 B/row of exchange bytes (the non-scaling resource)
-      // to save a sha2 recompute (CPU, which scales) — backwards at 4
-      // threads and at 4N executors alike. The task-local sort runs
-      // before the sha projection, so the write task's external sorter
-      // holds 64 fewer bytes per row; the projection above the Sort
-      // preserves row order, so the files stay (cluster_id, doc_id)-sorted
-      clustered.drop("content_sha")
-        .withColumn("_slot", slotCol(col("cluster_id"), col("doc_id")))
-        .repartition(parts, col("_slot"))
-        .drop("_slot")
-        .sortWithinPartitions(col("cluster_id"), col("doc_id"))
-        .withColumn("content_sha", sha2(col("content"), 256))
-        .select("doc_id", "repo", "path", "commit", "lang",
-          "content", "cluster_id", "doc_len", "content_sha")
-        .write.mode("overwrite")
-        .partitionBy("cluster_id")
-        .parquet(s"$indexDir/docstore")
+      val w = writeDocstore(spark, dense.df, indexDir, centroids, cfg.distance,
+        window, GranulePartitioner.slotMap(weights, parts), "overwrite")
       dense.unpersist()
-      val w = written()
-      // a negative id = the broadcast id lookup saw a key its keys-only
-      // pass did not (non-deterministic source) — fail the build, the
-      // docstore written above is not trustworthy
-      require(w.min_id >= 0,
-        s"dense-id lookup missed a key (min doc_id = ${w.min_id}): " +
-          "the source is not deterministic across jobs")
       (centroids, window, w)
       }
       // a resumed build keeps what the finished postings batches and the
@@ -512,7 +466,7 @@ object IndexBuilder {
               val slice = docstore
                 .filter(col("cluster_id").isin(clusters: _*))
               encodeBlocks(spark, slice, avgdl,
-                segOffset, state.granule_window, exchange = false)
+                segOffset, state.granule_window)
           }
           blocks.write.mode("overwrite")
             .partitionBy("cluster_id")
@@ -645,6 +599,74 @@ object IndexBuilder {
     (window, w)
   }
 
+  /** The docstore write of the build and of
+    * [[graft.maintain.Maintenance.append]]: `docs` (dense-id'd
+    * [[Corpus.docsFromCounted]] rows) are assigned under `centroids`,
+    * exchanged onto granule slots, sorted by (cluster_id, doc_id) and
+    * written in `mode`. `slots` is the build's sample-weighted slot map;
+    * an empty map places every granule round-robin (appends have no
+    * kmeans sample to weight them). Returns the write observation.
+    */
+  private[graft] def writeDocstore(
+      spark: SparkSession,
+      docs: DataFrame,
+      indexDir: String,
+      centroids: Array[Array[Double]],
+      dist: graft.cluster.Distance,
+      window: Long,
+      slots: Map[(Int, Long), Int],
+      mode: String): DocstoreWrite = {
+    val parts = spark.sessionState.conf.numShufflePartitions
+    val slotCol = GranulePartitioner.slotKeyCol(slots, window, parts) _
+    // fused content→features→argmin assignment, one codegen call per
+    // row with a reused feature buffer — no feat array column, no udf
+    // Seq boxing on the build's biggest stage (r3; ClusterAssignLenExpr).
+    // Late r3: doc_len rides the SAME scan (packed Long) — the
+    // docsFromCounted TokenCountExpr column is dropped and its
+    // second full tokenize pass pruned from this job entirely
+    // (token count == sum of feature buckets, property-tested)
+    val (clustered, written) = observeDocstore(docs
+      .drop("doc_len")
+      .withColumn("_cl", graft.functions.ClusterAssignExpr
+        .clusterIdAndLen(col("content"), centroids, dist))
+      .withColumn("cluster_id", shiftright(col("_cl"), 32).cast("int"))
+      .withColumn("doc_len",
+        col("_cl").bitwiseAND(lit(0xffffffffL)).cast("int"))
+      .drop("_cl"), centroids.length)
+    // granule-slot exchange ahead of the write — the docstore's ONE
+    // content shuffle: each task holds a few CONTIGUOUS (cluster, doc
+    // range) slices → ~2 files per cluster instead of tasks ×
+    // clusters, each file a disjoint doc range (the invariant the
+    // zero-shuffle postings encode relies on).
+    // content_sha is recomputed on the POST-exchange side: the column
+    // is derivable from content, so shipping it through the shuffle
+    // would pay 64 B/row of exchange bytes (the non-scaling resource)
+    // to save a sha2 recompute (CPU, which scales) — backwards at 4
+    // threads and at 4N executors alike. The task-local sort runs
+    // before the sha projection, so the write task's external sorter
+    // holds 64 fewer bytes per row; the projection above the Sort
+    // preserves row order, so the files stay (cluster_id, doc_id)-sorted
+    clustered.drop("content_sha")
+      .withColumn("_slot", slotCol(col("cluster_id"), col("doc_id")))
+      .repartition(parts, col("_slot"))
+      .drop("_slot")
+      .sortWithinPartitions(col("cluster_id"), col("doc_id"))
+      .withColumn("content_sha", sha2(col("content"), 256))
+      .select("doc_id", "repo", "path", "commit", "lang",
+        "content", "cluster_id", "doc_len", "content_sha")
+      .write.mode(mode)
+      .partitionBy("cluster_id")
+      .parquet(s"$indexDir/docstore")
+    val w = written()
+    // a negative id = the broadcast id lookup saw a key its keys-only
+    // pass did not (non-deterministic source) — fail, the docstore
+    // written above is not trustworthy
+    require(w.min_id >= 0,
+      s"dense-id lookup missed a key (min doc_id = ${w.min_id}): " +
+        "the source is not deterministic across jobs")
+    w
+  }
+
   /** What a docstore write observed: rows, Σ doc_len, the smallest
     * doc_id and `doc_counts(c)` = rows in cluster c.
     */
@@ -658,7 +680,7 @@ object IndexBuilder {
     * itself. The returned thunk blocks until an action on the returned
     * frame has run.
     */
-  def observeDocstore(docs: DataFrame, kc: Int): (DataFrame, () => DocstoreWrite) = {
+  private def observeDocstore(docs: DataFrame, kc: Int): (DataFrame, () => DocstoreWrite) = {
     val obs = Observation()
     val metrics =
       count(lit(1)).as("n") +: sum(col("doc_len")).as("sum_dl") +:
@@ -676,7 +698,7 @@ object IndexBuilder {
   /** The accumulators an encode job reports through: one [[SegmentMeta]]
     * per task and one [[ClusterStat]] per (task, cluster).
     */
-  def encodeAccumulators(spark: SparkSession):
+  private def encodeAccumulators(spark: SparkSession):
       (CollectionAccumulator[SegmentMeta], CollectionAccumulator[ClusterStat]) =
     (spark.sparkContext.collectionAccumulator[SegmentMeta]("segments"),
       spark.sparkContext.collectionAccumulator[ClusterStat]("cluster-stats"))
@@ -690,7 +712,7 @@ object IndexBuilder {
     * encode nanos. [[report]] emits the cluster stats and the task's
     * segment meta (the sum over its clusters).
     */
-  final class EncodeTally(segId: Int) {
+  private final class EncodeTally(segId: Int) {
     private val t0 = System.nanoTime()
     private val perCluster =
       scala.collection.mutable.LinkedHashMap.empty[Int, Array[Long]]
@@ -719,14 +741,16 @@ object IndexBuilder {
     }
   }
 
-  /** The B6 heart: docs → posting rows (one char-scan tokenize pass) →
-    * (appends only) one granule-hash shuffle on (cluster_id, doc_id div
-    * window) → sorted runs per (cluster, granule, term) → delta+varint
-    * blocks with idf-free g-max headers. Granule windows replace round
-    * 1's range partitioner: same balance (window size bounds granule
-    * size), same disjoint-doc-range blocks (a block never crosses its
-    * granule), but NO partitioner sampling job — which re-ran the whole
-    * tokenize pass.
+  /** The B6 heart: docstore rows → posting rows (one char-scan tokenize
+    * pass) → sorted runs per (cluster, granule, term) → delta+varint
+    * blocks with idf-free g-max headers. No exchange: the input is
+    * docstore rows as [[writeDocstore]] laid them out (a build batch's
+    * clusters, or an append's new ids), and block correctness never
+    * depended on placement, only on the local sort, since blocks group
+    * by (cluster, granule, term) within each partition and a block never
+    * crosses its granule. Granule windows replace round 1's range
+    * partitioner: same balance, same disjoint-doc-range blocks, but NO
+    * partitioner sampling job — which re-ran the whole tokenize pass.
     * Per-segment and per-cluster lineage/metrics flow back via
     * accumulators (the manifest step then needs no postings scan).
     * `segmentOffset` keeps appended segments' ids distinct from the base
@@ -737,38 +761,16 @@ object IndexBuilder {
       docs: DataFrame,
       avgdl: Double,
       segmentOffset: Int,
-      window: Long,
-      exchange: Boolean):
+      window: Long):
       (org.apache.spark.sql.Dataset[PostingBlock],
       CollectionAccumulator[SegmentMeta], CollectionAccumulator[ClusterStat]) = {
     import spark.implicits._
     require(window >= 1, s"granule window must be >= 1, got $window")
     val (acc, cacc) = encodeAccumulators(spark)
-    val parts = spark.sessionState.conf.numShufflePartitions
     val w = window
-
-    // With exchange=true (Maintenance.append: its new docs arrive in
-    // source order), DOC rows move to their granule's round-robin slot
-    // and the tokenize/explode runs AFTER it, partition-locally: the
-    // shuffle carries the text once (~3-5× fewer bytes than shuffling
-    // exploded posting rows), and the (cluster, granule, term, doc)
-    // ordering is restored by a LOCAL external sort — no second exchange.
-    // With exchange=false (the build path, r3), even that shuffle is
-    // gone: the input (granule-aligned docstore files) streams straight
-    // into the local sort — block correctness never depended on the
-    // placement, only on the local sort, since blocks group by
-    // (cluster, granule, term) within each partition.
-    val selected = docs
+    val postingRows = docs
       .select(col("doc_id"), col("cluster_id"), col("content"),
         col("doc_len"))
-    val routed =
-      if (exchange) selected
-        .withColumn("_slot", GranulePartitioner
-          .slotKeyCol(Map.empty, w, parts)(col("cluster_id"), col("doc_id")))
-        .repartition(parts, col("_slot"))
-        .drop("_slot")
-      else selected
-    val postingRows = routed
       .as[(Long, Int, String, Int)]
       .mapPartitions { docRows =>
         // per-term position grouping with REUSED structures: the
@@ -882,13 +884,14 @@ object IndexBuilder {
     * tombstoned entries, shift surviving doc ids (monotone, so decoded
     * ascending runs stay ascending and per-(cluster, term) doc ranges
     * stay disjoint across tasks), regroup by the NEW granule window and
-    * re-encode under the refreshed avgdl — the same streaming
-    * decode→encode shape as segment merge, with zero exchanges. At
+    * re-encode under the refreshed avgdl, with zero exchanges. At
     * scale this replaces a full content pass (tokenize over every
     * surviving document) with a pass over the compressed postings,
     * which are a fraction of the content bytes; correctness needs only
     * the decoded (doc, tf, dl, positions) tuples, all of which the
-    * blocks store losslessly.
+    * blocks store losslessly. Segment merge runs the same transform
+    * with no tombstones over granule-exchanged blocks, so each
+    * (cluster, granule, term) run is re-encoded whole in one task.
     */
   def transformBlocks(
       spark: SparkSession,

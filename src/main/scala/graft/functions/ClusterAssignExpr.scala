@@ -4,14 +4,14 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.cluster.{CoarseClusterer, Distance}
 
-/** Fused content → hashed-term-count features → coarse cluster
-  * assignment as ONE codegen expression — the docstore write's hottest
-  * per-row path.
+/** Fused content → hashed-term-count features → (coarse cluster
+  * assignment, doc length) as ONE codegen expression — the docstore
+  * write's hottest per-row path.
   *
   * The r2 form materialized a `feat` array COLUMN and fed it to a Scala
   * udf: every row paid an Array→Seq wrap plus 64 boxed Longs through
@@ -23,51 +23,22 @@ import graft.cluster.{CoarseClusterer, Distance}
   * non-ASCII rows fall back to the reference tokenizer — the same
   * contract as TokenCountExpr / CoarseClusterer.featuresOf, and the
   * features property-test covers both).
-  */
-case class ClusterAssignExpr(
-    child: Expression,
-    centroids: Array[Array[Double]],
-    dist: Distance) extends UnaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  @transient private lazy val buf = new Array[Long](CoarseClusterer.Dim)
-
-  override def nullSafeEval(input: Any): Any =
-    ClusterAssignExpr.assignInto(
-      input.asInstanceOf[UTF8String], buf, centroids, dist)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    val dRef = ctx.addReferenceObj("dist", dist,
-      classOf[Distance].getName)
-    val bufTerm = ctx.addMutableState("long[]", "featBuf",
-      v => s"$v = new long[${CoarseClusterer.Dim}];")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ClusterAssignExpr.assignInto(" +
-        s"$c, $bufTerm, $cRef, $dRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ClusterAssignExpr =
-    copy(child = newChild)
-}
-
-/** [[ClusterAssignExpr]] that ALSO yields the doc length from the same
-  * scan, packed as `(cluster_id << 32) | token_count` in one Long: the
-  * token count is the sum of the hashed-term-count buckets (every token
-  * increments exactly one bucket — including the non-ASCII fallback),
-  * so the docstore write's map side tokenizes each doc ONCE where it
-  * previously ran this scan AND TokenCountExpr separately. Unpack with
-  * `shiftright(_, 32)` / `bitwiseAND(0xffffffff)`; CollapseProject does
-  * not inline non-cheap expressions into multiple references, so the
-  * packed column is evaluated once.
+  *
+  * The result is packed as `(cluster_id << 32) | token_count` in one
+  * Long: the token count is the sum of the hashed-term-count buckets
+  * (every token increments exactly one bucket — including the non-ASCII
+  * fallback), so the docstore write's map side tokenizes each doc ONCE
+  * where it previously ran this scan AND TokenCountExpr separately.
+  * Unpack with `shiftright(_, 32)` / `bitwiseAND(0xffffffff)`;
+  * CollapseProject does not inline non-cheap expressions into multiple
+  * references, so the packed column is evaluated once.
   */
 case class ClusterAssignLenExpr(
     child: Expression,
     centroids: Array[Array[Double]],
     dist: Distance) extends UnaryExpression {
 
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  override def dataType: DataType = LongType
 
   @transient private lazy val buf = new Array[Long](CoarseClusterer.Dim)
 
@@ -90,20 +61,6 @@ case class ClusterAssignLenExpr(
 }
 
 object ClusterAssignExpr {
-
-  /** Features of the UTF8String's bytes written into `buf` (reused),
-    * then argmin over centroids — shared by interpreted eval and
-    * generated code. Bit-identical to
-    * `CoarseClusterer.assign(CoarseClusterer.featuresOf(s.toString), …)`.
-    */
-  def assignInto(s: UTF8String, buf: Array[Long],
-      centroids: Array[Array[Double]], dist: Distance): Int = {
-    val ok = featuresInto(s, buf)
-    val feat =
-      if (ok) buf
-      else CoarseClusterer.featuresOf(s.toString) // non-ASCII fallback
-    CoarseClusterer.assign(feat, centroids, dist)
-  }
 
   /** ASCII fast path: one byte scan, zero allocation. Returns false on
     * any non-ASCII byte (caller falls back; buf content then undefined).
@@ -149,8 +106,9 @@ object ClusterAssignExpr {
   }
 
   /** Features + argmin + token count in one scan (see
-    * [[ClusterAssignLenExpr]]); the count equals
-    * `Tokenizer.countTokens` exactly (property-tested).
+    * [[ClusterAssignLenExpr]]); the cluster equals
+    * `CoarseClusterer.assign(CoarseClusterer.featuresOf(s.toString), …)`
+    * and the count `Tokenizer.countTokens` exactly (property-tested).
     */
   def assignLenInto(s: UTF8String, buf: Array[Long],
       centroids: Array[Array[Double]], dist: Distance): Long = {
@@ -164,13 +122,7 @@ object ClusterAssignExpr {
     (CoarseClusterer.assign(feat, centroids, dist).toLong << 32) | len
   }
 
-  /** Column form. */
-  def clusterId(content: Column, centroids: Array[Array[Double]],
-      dist: Distance): Column =
-    GraftColumnBridge.column(ClusterAssignExpr(
-      GraftColumnBridge.expression(content), centroids, dist))
-
-  /** Column form of the packed (cluster_id, doc_len) variant. */
+  /** Column form: the packed (cluster_id, doc_len) Long. */
   def clusterIdAndLen(content: Column, centroids: Array[Array[Double]],
       dist: Distance): Column =
     GraftColumnBridge.column(ClusterAssignLenExpr(

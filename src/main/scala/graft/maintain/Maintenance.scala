@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.build.{ClusterStat, IndexBuilder, JsonFiles, ManifestIO}
-import graft.cluster.CoarseClusterer
 import graft.sources.Corpus
 
 /** Incremental index maintenance — the graft of the reference's point
@@ -44,57 +43,57 @@ object Maintenance {
     else JsonFiles.read(p, classOf[Array[Long]]).toSet
   }
 
-  /** M5: tombstone docIDs (idempotent, merges with existing). */
+  // one lock per index directory, keyed by its normalized absolute path
+  private val deleteLocks =
+    new java.util.concurrent.ConcurrentHashMap[java.nio.file.Path, AnyRef]()
+
+  /** M5: tombstone docIDs (idempotent, merges with existing). The
+    * read-modify-write of tombstones.json is serialized per index
+    * directory, so concurrent deletes in one JVM all land.
+    */
   def delete(indexDir: String, docIds: Seq[Long]): Unit =
-    JsonFiles.write(tombstonePath(indexDir),
-      (loadTombstones(indexDir) ++ docIds).toArray.sorted)
+    deleteLocks.computeIfAbsent(Paths.get(indexDir).toAbsolutePath.normalize,
+      _ => new Object).synchronized {
+      JsonFiles.write(tombstonePath(indexDir),
+        (loadTombstones(indexDir) ++ docIds).toArray.sorted)
+    }
 
   /** M1: append an F1-shaped batch of new source files as a mini-segment.
     * New docIDs = num_docs + rank within the batch by (repo,path,commit).
+    * Like the reference's `push!`, which encodes new points with the
+    * build's quantizer and encoder (`utils.jl:140-143`), an append is
+    * the build's docstore write under the index's fixed centroids
+    * (round-robin granule slots, append mode), then the build's block
+    * encode over the docstore rows it just wrote.
     */
   def append(spark: SparkSession, indexDir: String, newSource: DataFrame): Unit = {
     val manifest = ManifestIO.read(s"$indexDir/manifest.json")
-    val centroids = manifest.centroids
-    val avgdl = manifest.avgdl // held until compaction
     // appended segments REUSE the base build's granule window so every
     // block — old or new — stays inside one (cluster, window) granule
     // and query-side granule splits remain safe
     val window = manifest.granule_window
-
-    // no withFeatures wrap: without a pre-materialized `feat` column,
-    // withClusterId assigns through the fused codegen content→argmin
-    // expression — the r4 wrap materialized `feat` through the boxed-Seq
-    // udf and routed the append down the udf branch, leaving the codegen
-    // branch dead on the one production caller [VERDICT r4 #2]
     val dense = Corpus.docsFromCounted(newSource,
       idOffset = manifest.num_docs)
-    val docs = CoarseClusterer.withClusterId(dense.df, centroids,
-      graft.cluster.Distance.byName(manifest.distance))
-    val (observed, written) = IndexBuilder.observeDocstore(docs, manifest.kc)
-
-    observed
-      .repartition(spark.sessionState.conf.numShufflePartitions,
-        col("cluster_id"), expr(s"doc_id div $window"))
-      .sortWithinPartitions(col("cluster_id"), col("doc_id"))
-      .write.mode("append")
-      .partitionBy("cluster_id")
-      .parquet(s"$indexDir/docstore")
+    val added = IndexBuilder.writeDocstore(spark, dense.df, indexDir,
+      manifest.centroids, graft.cluster.Distance.byName(manifest.distance),
+      window, Map.empty, "append")
+    dense.unpersist()
 
     val segOffset = (manifest.segments.map(_.segment_id) :+ 0).max + 1
-    val (blocks, acc, cacc) =
-      IndexBuilder.encodeBlocks(spark, docs, avgdl, segOffset, window,
-        exchange = true)
+    // avgdl is held until compaction
+    val (blocks, acc, cacc) = IndexBuilder.encodeBlocks(spark,
+      graft.build.IndexSchemas.readDocstore(spark, indexDir)
+        .filter(col("doc_id") >= manifest.num_docs),
+      manifest.avgdl, segOffset, window)
     blocks.write.mode("append")
       .partitionBy("cluster_id")
       .parquet(s"$indexDir/postings")
-    dense.unpersist()
 
     // the manifest gains what the two writes observed: doc counts from
     // the docstore write, block stats and the mini-segments' lineage
     // from the encode accumulators [ADVICE r1: a discarded accumulator
     // left manifest.segments stale and later appends reusing the same
     // segOffset]. Centroids and the coarse graph carry over unchanged.
-    val added = written()
     val nNew = manifest.num_docs + added.num_docs
     ManifestIO.write(s"$indexDir/manifest.json", manifest.copy(
       num_docs = nNew,
@@ -112,23 +111,16 @@ object Maintenance {
   /** Segment merge (north_star: "merge partition-local segments into a
     * global index") — the Lucene forceMerge analog: consolidates the
     * fragmented blocks left by appends into minimal full blocks per
-    * (cluster, term), WITHOUT touching the docstore or docIDs. Also
-    * refreshes avgdl/idf exactly over the current corpus (append holds
-    * them stale by design). One postings-only job: no tokenize pass.
-    * The manifest gets the merge kernel's segments and per-cluster
-    * block stats; doc counts, centroids and the graph carry over.
+    * (cluster, granule, term), WITHOUT touching the docstore or docIDs.
+    * Also refreshes avgdl/idf exactly over the current corpus (append
+    * holds them stale by design). It is compaction's block transform
+    * ([[IndexBuilder.transformBlocks]]) with no tombstones over the
+    * postings hash-exchanged on their granule key: no tokenize pass.
+    * The manifest gets the transform's segments and per-cluster block
+    * stats; doc counts, centroids and the graph carry over.
     */
   def mergeSegments(spark: SparkSession, indexDir: String): Unit = {
-    import spark.implicits._
-    import graft.codec.PostingCodec
-    import graft.model.PostingBlock
-    import graft.query.Bm25
-
     val manifest0 = ManifestIO.read(s"$indexDir/manifest.json")
-    // merged blocks must STAY granule-contained (the query-side split
-    // key relies on it), so consolidation groups decoded entries by
-    // their (cluster, doc_id div window) granule — exactly the fragments
-    // appends create inside each window get fused, nothing crosses one.
     val window = manifest0.granule_window
 
     // exact refreshed stats (Long sums → deterministic)
@@ -138,56 +130,16 @@ object Maintenance {
     val sumDl = statsRow.getLong(1)
     val avgdl = sumDl.toDouble / n
 
-    val (acc, cacc) = IndexBuilder.encodeAccumulators(spark)
-
-    // the shuffle SORTS runs into (cluster, granule, term, first_doc)
-    // order, so the consolidator streams one grouped run at a time —
-    // retained heap is one (cluster, granule, term) run, never the whole
-    // task's blocks [VERDICT r1: it.toSeq buffered everything]
-    val merged = graft.build.IndexSchemas.readPostings(spark, indexDir)
-      .as[PostingBlock]
-      .repartition(col("cluster_id"))
-      .sortWithinPartitions(col("cluster_id"),
-        expr(s"first_doc div $window"), col("term"), col("first_doc"))
-      .mapPartitions { it =>
-        val segId = org.apache.spark.TaskContext.getPartitionId()
-        val tally = new IndexBuilder.EncodeTally(segId)
-        var done = false
-        val runs = new Iterator[Seq[PostingBlock]] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): Seq[PostingBlock] = {
-            val head = buf.head
-            val key = (head.cluster_id, head.first_doc / window, head.term)
-            val run = scala.collection.mutable.ArrayBuffer.empty[PostingBlock]
-            while (buf.hasNext && {
-              val b = buf.head
-              (b.cluster_id, b.first_doc / window, b.term) == key
-            }) run += buf.next()
-            run.toSeq
-          }
-        }
-        val out = runs.flatMap { bs =>
-          // runs within a granule are disjoint doc ranges, pre-sorted
-          // by first_doc: decode, concat, re-encode as full blocks
-          val f0 = System.nanoTime()
-          val entries = bs.flatMap(PostingCodec.decodeEntries)
-          val blocks = PostingCodec.encodeTerm(bs.head.term,
-            bs.head.cluster_id, segId,
-            entries, (tf, dl) => Bm25.g(tf, dl, avgdl))
-          tally.add(bs.head.cluster_id, entries.size, blocks,
-            System.nanoTime() - f0)
-          blocks
-        }
-        out ++ {
-          // accumulator flush after the stream is fully consumed
-          if (!done) {
-            done = true
-            tally.report(acc, cacc)
-          }
-          Iterator.empty
-        }
-      }
+    // the exchange puts every block of a (cluster, doc_id div window)
+    // granule in one task, so each (cluster, granule, term) run is
+    // re-encoded whole; merged blocks stay granule-contained (the
+    // query-side split key relies on it). Tombstoned docs stay in the
+    // postings: queries filter them until compaction.
+    val (merged, acc, cacc) = IndexBuilder.transformBlocks(spark,
+      graft.build.IndexSchemas.readPostings(spark, indexDir)
+        .repartition(col("cluster_id"), expr(s"first_doc div $window")),
+      spark.sparkContext.broadcast(Array.empty[Long]), avgdl,
+      segmentOffset = 0, window)
 
     // write to a sibling dir, then swap: live dir moves ASIDE first so a
     // crash mid-swap leaves a recoverable postings_old, never a missing

@@ -65,15 +65,24 @@ object DerivedValueCache {
   private val entries = new scala.collection.mutable.ArrayDeque[
     ((AnyRef, String), Any)]()
 
-  def apply[T](source: AnyRef, tag: String)(build: => T): T =
-    entries.synchronized {
-      entries.collectFirst {
-        case ((k, t), v) if (k eq source) && t == tag => v.asInstanceOf[T]
-      }.getOrElse {
-        val v = build
-        entries.append(((source, tag), v))
-        while (entries.size > Max) { entries.removeHead(): Unit }
-        v
+  /** `build` (often a Spark job) runs OUTSIDE the lock, so a slow build
+    * never blocks lookups of other keys. Two concurrent misses on one
+    * key may both build; the first insert wins and both callers get it
+    * (the values are deterministic, so the duplicate is only wasted work).
+    */
+  def apply[T](source: AnyRef, tag: String)(build: => T): T = {
+    def lookup = entries.collectFirst {
+      case ((k, t), v) if (k eq source) && t == tag => v.asInstanceOf[T]
+    }
+    entries.synchronized(lookup).getOrElse {
+      val v = build
+      entries.synchronized {
+        lookup.getOrElse {
+          entries.append(((source, tag), v))
+          while (entries.size > Max) { entries.removeHead(): Unit }
+          v
+        }
       }
     }
+  }
 }

@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 
 import graft.build.{IndexBuilder, IndexSchemas, ManifestIO}
 import graft.cluster.{Distance, GraphCoarseSearch}
+import graft.codec.PostingCodec
 import graft.maintain.Maintenance
+import graft.model.PostingBlock
 import graft.query.{IndexSearcher, QuerySet}
 import graft.sources.Corpus
 
@@ -134,6 +136,14 @@ class MaintenanceSpec extends SparkSpec {
       .groupBy("cluster_id", "term").count()
       .filter(col("count") > 1).count()
     assert(preBlocks > 0, "appends should leave fragmented (cluster,term) runs")
+    // every posting as (cluster, term, doc, tf, dl, positions), with
+    // its multiplicity
+    def decoded() = IndexSchemas.readPostings(spark, dir).as[PostingBlock]
+      .collect().toSeq
+      .flatMap(b => PostingCodec.decodeEntries(b).map(e =>
+        (b.cluster_id, b.term, e.doc, e.tf, e.dl, e.positions.toSeq)))
+      .groupMapReduce(identity)(_ => 1)(_ + _)
+    val before = decoded()
 
     Maintenance.mergeSegments(spark, dir)
 
@@ -144,14 +154,19 @@ class MaintenanceSpec extends SparkSpec {
       .agg(sum(col("doc_len")), count(org.apache.spark.sql.functions.lit(1)))
       .head()
     assert(m.avgdl == exact.getLong(0).toDouble / exact.getLong(1))
-    // blocks consolidated: every (cluster,term) with df<=128 is ONE block
-    val fragmented = spark.read.parquet(s"$dir/postings")
-      .groupBy("cluster_id", "term")
-      .agg(count(org.apache.spark.sql.functions.lit(1)).as("blocks"),
-        sum(col("count")).as("df"))
-      .filter(col("df") <= 128 && col("blocks") > 1)
-      .count()
-    assert(fragmented == 0)
+    // merge re-encodes, never adds, drops or alters a posting
+    assert(decoded() == before)
+    // blocks consolidated: within every (cluster, granule, term) run,
+    // every block but the last is full
+    val w = m.granule_window
+    val underfull = IndexSchemas.readPostings(spark, dir)
+      .select("cluster_id", "term", "first_doc", "count").collect()
+      .groupBy(r => (r.getInt(0), r.getLong(2) / w, r.getString(1)))
+      .filter { case (_, run) =>
+        run.sortBy(_.getLong(2)).init.exists(_.getInt(3) != PostingCodec.BlockSize)
+      }
+      .keys
+    assert(underfull.isEmpty, underfull.take(5))
     // post-merge WAND == declarative scoring over the SAME docstore
     val wand = IndexSearcher.topK(spark, dir,
       QuerySet.queries.take(5) :+ (99 -> Seq("quartz", "join")), 10)
@@ -173,7 +188,22 @@ class MaintenanceSpec extends SparkSpec {
       ("repo-x", "src/new/b.scala", "c0ffee000002", "scala",
         "zebra join hash quail")
     ).toDF("repo", "path", "commit", "lang", "content")
+    def docstoreFiles() = {
+      import scala.jdk.CollectionConverters._
+      Files.walk(java.nio.file.Paths.get(dir, "docstore")).iterator().asScala
+        .map(_.toString).filter(_.endsWith(".parquet")).toSet
+    }
+    val built = docstoreFiles()
     Maintenance.append(spark, dir, newRows)
+
+    // the parquet files append writes have the build's schema, column
+    // order included
+    def schemas(files: Set[String]) = files.map(f =>
+      spark.read.parquet(f).schema.fields.map(c => (c.name, c.dataType)).toSeq)
+    val appended = docstoreFiles() -- built
+    assert(appended.nonEmpty)
+    assert(schemas(appended) == schemas(built))
+    assert(schemas(built).size == 1)
 
     val m2 = ManifestIO.read(s"$dir/manifest.json")
     assert(m2.num_docs == n + 2)
@@ -216,6 +246,11 @@ class MaintenanceSpec extends SparkSpec {
         docs.keys.toSeq.sorted.map(c =>
           (c, docs(c), perCluster.getOrElse(c, (0L, 0L, 0L)))), step)
       assert(m.num_docs == docs.values.sum, step)
+      // granule containment: no block crosses its (cluster, window)
+      val w = m.granule_window
+      assert(postings.filter(
+        expr(s"first_doc div $w") =!= expr(s"last_doc div $w")).count() == 0,
+        step)
       assert(m.vocab_size ==
         IndexSchemas.readDictionary(spark, dir).count(), step)
       val perSegment = blockStats("segment_id")
@@ -246,5 +281,26 @@ class MaintenanceSpec extends SparkSpec {
     Maintenance.mergeSegments(spark, dir)
     check("merge")
     assert(ManifestIO.read(s"$dir/manifest.json").num_docs == n + 4)
+  }
+
+  test("concurrent deletes into one index all land") {
+    // delete touches only tombstones.json, so an empty dir stands in for
+    // an index
+    val dir = Files.createTempDirectory("graft-maint-conc").toString
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val threads = (0 until 8).map { t =>
+      val th = new Thread(() => {
+        start.await()
+        (0 until 25).foreach { i =>
+          Maintenance.delete(dir, Seq(t * 1000L + 2 * i, t * 1000L + 2 * i + 1))
+        }
+      })
+      th.start()
+      th
+    }
+    start.countDown()
+    threads.foreach(_.join())
+    assert(Maintenance.loadTombstones(dir) ==
+      (0 until 8).flatMap(t => (0 until 50).map(t * 1000L + _)).toSet)
   }
 }

@@ -288,8 +288,7 @@ class Round3Spec extends SparkSpec {
     // local sort → encode, no Exchange anywhere in the plan
     val docstore = spark.read.parquet(s"$dir/docstore")
     val (blocks, _, _) = IndexBuilder.encodeBlocks(
-      spark, docstore, avgdl = 10.0, segmentOffset = 0, window = 8192,
-      exchange = false)
+      spark, docstore, avgdl = 10.0, segmentOffset = 0, window = 8192)
     val postingsPlan = blocks.queryExecution.executedPlan.toString
     assert(!postingsPlan.contains("Exchange"), postingsPlan)
 
@@ -391,10 +390,10 @@ class Round3Spec extends SparkSpec {
   }
 
   // ------------------------------------------------------------------
-  // fused assignment expression == feat-column + udf path
+  // fused assignment expression == reference features + argmin + count
   // ------------------------------------------------------------------
 
-  test("property: ClusterAssignExpr.assignInto == assign(featuresOf) on arbitrary text") {
+  test("property: assignLenInto == (assign(featuresOf), countTokens) on arbitrary text") {
     import graft.cluster.CoarseClusterer
     import org.apache.spark.unsafe.types.UTF8String
     import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -406,17 +405,9 @@ class Round3Spec extends SparkSpec {
       (1, Gen.oneOf('é', 'λ', '中')))).map(_.mkString)
     Seq(Distance.SqEuclidean, Distance.Cosine).foreach { d =>
       val buf = new Array[Long](CoarseClusterer.Dim)
+      // the packed (cluster, doc_len): the cluster of the reference
+      // features, and the length equals the reference token count exactly
       val res = SCTest.check(
-        SCTest.Parameters.default.withMinSuccessfulTests(300),
-        Prop.forAll(texts) { t =>
-          graft.functions.ClusterAssignExpr
-            .assignInto(UTF8String.fromString(t), buf, cs, d) ==
-            CoarseClusterer.assign(CoarseClusterer.featuresOf(t), cs, d)
-        })
-      assert(res.passed, res.status.toString)
-      // the packed (cluster, doc_len) variant: same cluster, and the
-      // length equals the reference token count exactly
-      val res2 = SCTest.check(
         SCTest.Parameters.default.withMinSuccessfulTests(300),
         Prop.forAll(texts) { t =>
           val p = graft.functions.ClusterAssignExpr
@@ -426,7 +417,7 @@ class Round3Spec extends SparkSpec {
             (p & 0xffffffffL).toInt ==
               graft.tokenize.Tokenizer.countTokens(t)
         })
-      assert(res2.passed, res2.status.toString)
+      assert(res.passed, res.status.toString)
     }
   }
 

@@ -20,25 +20,43 @@ class Round5Spec extends SparkSpec {
 
   test("append-path frame assigns via codegen ClusterAssign, no udf in plan") {
     import spark.implicits._
-    // mirrors Maintenance.append's construction exactly: docsFromCounted
-    // (no feat column) → withClusterId
+    val dir = Files.createTempDirectory("graft-r5-append").toString
+    IndexBuilder.build(spark, sf0001, dir,
+      IndexBuilder.BuildConfig(resume = false))
+    // the executed plan of the docstore write Maintenance.append runs
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
     // repartition: a bare LocalRelation source would let
-    // ConvertToLocalRelation constant-fold the whole projection chain
-    // into a LocalTableScan and there'd be no plan to assert on
-    val src = (0 until 20).map(i =>
-      (s"repo-${i % 3}", f"src/app/$i%03d.scala", f"$i%012d", "scala",
-        s"object Fresh$i { val x = $i }"))
+    // ConvertToLocalRelation constant-fold the assignment projection
+    // into a LocalTableScan and there'd be no expression to assert on
+    try Maintenance.append(spark, dir, (0 until 20).map(i =>
+        (s"repo-${i % 3}", f"src/app/$i%03d.scala", f"$i%012d", "scala",
+          s"object Fresh$i { val x = $i }"))
       .toDF("repo", "path", "commit", "lang", "content")
-      .repartition(2)
-    val dense = graft.sources.Corpus.docsFromCounted(src, idOffset = 100)
-    val centroids = Array(Array.fill(CoarseClusterer.Dim)(0.0),
-      Array.fill(CoarseClusterer.Dim)(2.0))
-    val docs = CoarseClusterer.withClusterId(dense.df, centroids)
-    assert(docs.count() == 20)
-    val plan = docs.queryExecution.executedPlan.toString
-    assert(plan.toLowerCase.contains("clusterassign"), plan.take(1200))
-    assert(!plan.contains("UDF"), plan.take(1200))
-    dense.unpersist()
+      .repartition(2))
+    finally spark.listenerManager.unregister(listener)
+    // listener events are delivered asynchronously
+    def docstoreWrite = {
+      import scala.jdk.CollectionConverters._
+      plans.asScala.find(p =>
+        p.contains("InsertIntoHadoopFsRelationCommand") &&
+          p.contains(s"$dir/docstore"))
+    }
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (docstoreWrite.isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    val plan = docstoreWrite.getOrElse(fail(
+      s"no docstore write among ${plans.size} captured plans"))
+    assert(plan.toLowerCase.contains("clusterassignlen"), plan.take(3000))
+    assert(!plan.contains("UDF"), plan.take(3000))
   }
 
   test("compact reuses the coarse quantizer: centroids frozen, assignments stable") {
@@ -122,6 +140,32 @@ class Round5Spec extends SparkSpec {
     // a miss after eviction rebuilds (no stale handle returned)
     val a3 = DerivedFrameCache(base, "t5-a")(make())
     assert(builds == 3 && !(a3 eq a))
+  }
+
+  test("DerivedValueCache: a build blocked on one key does not block lookups of another") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import graft.ops.DerivedValueCache
+    val keyA = new Object
+    val keyB = new Object
+    assert(DerivedValueCache(keyB, "t5-b")(7) == 7)
+    val building = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val a = Future(DerivedValueCache(keyA, "t5-a") {
+      building.countDown()
+      release.await()
+      1
+    })
+    try {
+      assert(building.await(10, TimeUnit.SECONDS))
+      val b = Future(DerivedValueCache[Int](keyB, "t5-b")(fail("B is cached")))
+      assert(Await.result(b, 10.seconds) == 7)
+    } finally release.countDown()
+    assert(Await.result(a, 10.seconds) == 1)
+    // A's value was inserted once its build finished
+    assert(DerivedValueCache(keyA, "t5-a")(2) == 1)
   }
 
   test("EmbedCellAssignExpr bit-identical to the udf it replaced") {
