@@ -106,6 +106,37 @@ object IndexBuilder {
       // evidence machine-readably [VERDICT r5 #3]
       stepWindows: Seq[(String, Long, Long)] = Nil)
 
+  /** Times top-level steps. Windows are epoch ms derived from ONE
+    * epoch anchor + monotonic nano offsets: they stay ordered and walls
+    * non-negative even if the wall clock steps (NTP) mid-run — close
+    * enough to Spark's job-submit currentTimeMillis for per-step
+    * attribution. Serves the build and [[graft.maintain.Maintenance.compact]].
+    */
+  private[graft] final class StepClock(label: String) {
+    private val t0 = System.nanoTime()
+    private val anchor = System.currentTimeMillis()
+    private var windows = Vector.empty[(String, Long, Long)]
+    private def nowMs(): Long = anchor + (System.nanoTime() - t0) / 1000000L
+
+    def apply[T](name: String)(body: => T): T = {
+      val t = System.nanoTime()
+      val ms0 = nowMs()
+      val r = body
+      windows :+= ((name, ms0, nowMs()))
+      System.err.println(
+        f"[$label] step $name%-10s ${(System.nanoTime() - t) / 1e9}%.2fs")
+      r
+    }
+
+    def result(manifest: IndexManifest, run: Seq[String] = windows.map(_._1),
+        skip: Seq[String] = Nil): BuildResult = {
+      val totalMillis = (System.nanoTime() - t0) / 1000000L
+      BuildResult(manifest, totalMillis,
+        manifest.num_docs * 1000.0 / math.max(1L, totalMillis), run, skip,
+        windows)
+    }
+  }
+
   private def ckptPath(indexDir: String, step: String) =
     Paths.get(indexDir, "_checkpoints", s"$step.done")
 
@@ -135,16 +166,17 @@ object IndexBuilder {
   }
 
   /** Build from any F1-shaped source DataFrame; `idOrder` defines the
-    * dense docID order (compaction passes the old id).
+    * dense docID order ([[graft.maintain.Maintenance.prepend]] passes
+    * (new-first, old id, keys)).
     *
     * `fixedCentroids`: reuse an existing coarse quantizer instead of
     * fitting one — the kmeans fit is SKIPPED entirely and every doc is
-    * assigned under the given centroids. Compaction threads the source
-    * manifest's centroids through here: the reference's
-    * `delete_from_index!` only shifts ids and never retrains the coarse
-    * or residual quantizer (/root/reference/src/utils.jl:90-105), so
-    * cluster assignments stay STABLE across compactions and the rebuild
-    * spends no sample-fit driver time [VERDICT r4 #3].
+    * assigned under the given centroids. Prepend threads the source
+    * manifest's centroids through here: the reference's `pushfirst!`
+    * never retrains the coarse or residual quantizer
+    * (/root/reference/src/utils.jl:2-6), so cluster assignments stay
+    * stable and the rebuild spends no sample-fit driver time.
+    * (Compaction is not a build: see [[graft.maintain.Maintenance.compact]].)
     */
   def buildFromSource(
       spark: SparkSession,
@@ -154,18 +186,9 @@ object IndexBuilder {
       idOrder: Seq[String] = Seq("repo", "path", "commit"),
       lineageName: String = "<dataframe>",
       knownRows: Long = 0L,
-      fixedCentroids: Option[Array[Array[Double]]] = None,
-      // compaction fast path (r7): the source ALREADY carries dense
-      // 0-based doc_id, cluster_id, doc_len and content_sha (the
-      // docstore is lossless and compaction never retrains, so every
-      // one of them is a stored, deterministic value — recomputing them
-      // was provably redundant work). The docstore step then skips the
-      // dense-id keys pass, the kmeans sample collect and the per-row
-      // content->cluster assignment entirely: ONE write, no exchange.
-      // Requires fixedCentroids and an exact knownRows.
-      preAssigned: Option[PreAssignedSource] = None): BuildResult = {
+      fixedCentroids: Option[Array[Array[Double]]] = None): BuildResult = {
     import spark.implicits._
-    val t0 = System.nanoTime()
+    val clock = new StepClock("build")
     val sfDir = lineageName
     // B2 analog (/root/reference/src/index.jl:115-125): config sanity is
     // always checked; the key-uniqueness scan (docID determinism depends
@@ -191,8 +214,7 @@ object IndexBuilder {
         s"batches=${cfg.postingsBatches} idOrder=${idOrder.mkString(",")} " +
         s"dist=${cfg.distance.getClass.getSimpleName}" +
         fixedCentroids.map(c => s" fixed=${java.util.Arrays.deepHashCode(
-          c.asInstanceOf[Array[AnyRef]])}").getOrElse("") +
-        (if (preAssigned.nonEmpty) " pre=1" else "")
+          c.asInstanceOf[Array[AnyRef]])}").getOrElse("")
     val fpPath = Paths.get(indexDir, "_checkpoints", "fingerprint.txt")
     val fpMatches = Files.exists(fpPath) &&
       new String(Files.readAllBytes(fpPath), StandardCharsets.UTF_8) ==
@@ -211,24 +233,11 @@ object IndexBuilder {
 
     var run = Vector.empty[String]
     var skip = Vector.empty[String]
-    var stepWin = Vector.empty[(String, Long, Long)]
-    // epoch-ms windows derived from ONE epoch anchor + monotonic nano
-    // offsets: windows stay ordered and walls non-negative even if the
-    // wall clock steps (NTP) mid-build — close enough to Spark's
-    // job-submit currentTimeMillis for per-step attribution
-    val epochAnchor = System.currentTimeMillis()
-    def monoMs(): Long = epochAnchor + (System.nanoTime() - t0) / 1000000L
 
     def step[T](name: String)(body: => T): Unit =
       if (cfg.resume && isDone(indexDir, name)) { skip :+= name }
       else {
-        val t = System.nanoTime()
-        val ms0 = monoMs()
-        body
-        markDone(indexDir, name, s"input=$sfDir")
-        stepWin :+= ((name, ms0, monoMs()))
-        System.err.println(
-          f"[build] step $name%-10s ${(System.nanoTime() - t) / 1e9}%.2fs")
+        clock(name) { body; markDone(indexDir, name, s"input=$sfDir") }
         run :+= name
       }
 
@@ -245,14 +254,6 @@ object IndexBuilder {
     // write's range-partitioner sampling; the granule-hash exchange
     // needs no sampling at all.
     step("docstore") {
-      val (centroids, window, written) = preAssigned match {
-        case Some(_) =>
-          val centroids = fixedCentroids.getOrElse(sys.error(
-            "preAssigned requires fixedCentroids"))
-          val (window, written) =
-            docstorePreAssigned(spark, source, indexDir, centroids, knownRows)
-          (centroids, window, written)
-        case None =>
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -353,11 +354,10 @@ object IndexBuilder {
         }
         .groupBy(identity).map { case (g, xs) => g -> xs.length.toLong }
         .toSeq
-      val w = writeDocstore(spark, dense.df, indexDir, centroids, cfg.distance,
-        window, GranulePartitioner.slotMap(weights, parts), "overwrite")
+      val written = writeDocstore(spark, dense.df, indexDir, centroids,
+        cfg.distance, window, GranulePartitioner.slotMap(weights, parts),
+        "overwrite")
       dense.unpersist()
-      (centroids, window, w)
-      }
       // a resumed build keeps what the finished postings batches and the
       // dictionary step recorded: their markers still stand
       val kept =
@@ -369,8 +369,6 @@ object IndexBuilder {
         kept.fold(Seq.empty[SegmentMeta])(_.segments),
         kept.fold(-1L)(_.vocab_size)))
     }
-
-    def docstore = IndexSchemas.readDocstore(spark, indexDir)
 
     // ---- step 2: postings (blocks, no shuffle) --------------------------
     // BM25 factorizes as idf × g(tf, dl): blocks store the idf-free
@@ -384,9 +382,8 @@ object IndexBuilder {
     step("postings") {
       val state = loadState(indexDir)
       val avgdl = state.avgdl
-      val kc = state.centroids.length
-      val parts = spark.sessionState.conf.numShufflePartitions
-      val batches = clusterBatches(kc, cfg.postingsBatches)
+      val batches = clusterBatches(state.centroids.length,
+        cfg.postingsBatches)
       if (!cfg.resume) {
         // fresh build: wipe all posting partitions + batch markers (a
         // reused dir may hold state from a different kc)
@@ -421,84 +418,65 @@ object IndexBuilder {
       // removes the build's largest remaining shuffle — full content
       // rows — which is exactly the stage class that refuses to scale
       // with threads (BASELINE.md calibration). Read-partition sizing
-      // replaces the exchange's balancing role: target ≈ bytes/parts.
-      // compaction transform (r7): source = the OLD index's postings
-      val transformFrom = preAssigned.flatMap(_.transformFrom)
-      val mpbKey = "spark.sql.files.maxPartitionBytes"
-      val mpbPrev = spark.conf.get(mpbKey)
-      val totalBytes = org.apache.commons.io.FileUtils
-        .sizeOfDirectory(new java.io.File(transformFrom
-          .map { case (srcDir, _) => s"$srcDir/postings" }
-          .getOrElse(s"$indexDir/docstore")))
-      // floor 1 MB (was 4 MB): the amplified bench docstore
+      // replaces the exchange's balancing role: target ≈ bytes/parts,
+      // floored at 1 MB (was 4 MB: the amplified bench docstore
       // dictionary-compresses to ~15-30 MB, and the 4 MB floor
       // collapsed the whole postings read to ~6 tasks — a 4-thread
-      // level ran a 2-wave job with an idle tail. At real scale
+      // level ran a 2-wave job with an idle tail). At real scale
       // bytes/parts dominates the floor either way.
-      spark.conf.set(mpbKey,
-        math.max(1L << 20, totalBytes / math.max(1, parts)).toString)
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      val jobs = pending.map { case (clusters, bi, segOffset) =>
-        Future {
-          val marker = s"postings_batch_$bi"
-          // each batch writes to its own staging dir (concurrent jobs
-          // must not share a FileOutputCommitter _temporary), then the
-          // driver moves the cluster dirs into postings/ — idempotent
-          // restart wipes partial moves first
-          val staging = s"$indexDir/postings_staging_$bi"
-          clusters.foreach { cid =>
-            org.apache.commons.io.FileUtils.deleteQuietly(
-              new java.io.File(s"$indexDir/postings/cluster_id=$cid"))
-          }
-          org.apache.commons.io.FileUtils.deleteQuietly(
-            new java.io.File(staging))
-          val (blocks, acc, cacc) = transformFrom match {
-            case Some((srcDir, deadBc)) =>
-              // decode→shift→re-encode the source index's blocks — no
-              // content pass (see transformBlocks)
-              val oldSlice = IndexSchemas.readPostings(spark, srcDir)
-                .filter(col("cluster_id").isin(clusters: _*))
-              transformBlocks(spark, oldSlice, deadBc, avgdl, segOffset,
-                state.granule_window)
-            case None =>
-              val slice = docstore
-                .filter(col("cluster_id").isin(clusters: _*))
-              encodeBlocks(spark, slice, avgdl,
-                segOffset, state.granule_window)
-          }
-          blocks.write.mode("overwrite")
-            .partitionBy("cluster_id")
-            .parquet(staging)
-          Files.createDirectories(Paths.get(s"$indexDir/postings"))
-          new java.io.File(staging).listFiles()
-            .filter(_.getName.startsWith("cluster_id="))
-            .foreach { d =>
-              Files.move(d.toPath,
-                Paths.get(s"$indexDir/postings/${d.getName}"))
+      withReadSplit(spark, s"$indexDir/docstore", 1L << 20) {
+        val jobs = pending.map { case (clusters, bi, segOffset) =>
+          Future {
+            val marker = s"postings_batch_$bi"
+            // each batch writes to its own staging dir (concurrent jobs
+            // must not share a FileOutputCommitter _temporary), then the
+            // driver moves the cluster dirs into postings/ — idempotent
+            // restart wipes partial moves first
+            val staging = s"$indexDir/postings_staging_$bi"
+            clusters.foreach { cid =>
+              org.apache.commons.io.FileUtils.deleteQuietly(
+                new java.io.File(s"$indexDir/postings/cluster_id=$cid"))
             }
-          org.apache.commons.io.FileUtils.deleteQuietly(
-            new java.io.File(staging))
-          metaLock.synchronized {
-            // a (re-)run batch replaces its clusters' stats and its
-            // ENTIRE segment-id range [segOffset, segOffset + 10000)
-            val st = loadState(indexDir)
-            saveState(indexDir, st.copy(
-              cluster_stats = st.cluster_stats
-                .filterNot(c => clusters.contains(c.cluster_id)) ++
-                collected(cacc),
-              segments = (st.segments.filterNot(s =>
-                s.segment_id >= segOffset && s.segment_id < segOffset + 10000)
-                ++ collected(acc)).sortBy(_.segment_id)))
-            markDone(indexDir, marker,
-              s"input=$sfDir clusters=${clusters.mkString(",")}")
-            run :+= marker
+            org.apache.commons.io.FileUtils.deleteQuietly(
+              new java.io.File(staging))
+            val (blocks, acc, cacc) = encodeBlocks(spark,
+              IndexSchemas.readDocstore(spark, indexDir)
+                .filter(col("cluster_id").isin(clusters: _*)),
+              avgdl, segOffset, state.granule_window)
+            blocks.write.mode("overwrite")
+              .partitionBy("cluster_id")
+              .parquet(staging)
+            Files.createDirectories(Paths.get(s"$indexDir/postings"))
+            new java.io.File(staging).listFiles()
+              .filter(_.getName.startsWith("cluster_id="))
+              .foreach { d =>
+                Files.move(d.toPath,
+                  Paths.get(s"$indexDir/postings/${d.getName}"))
+              }
+            org.apache.commons.io.FileUtils.deleteQuietly(
+              new java.io.File(staging))
+            metaLock.synchronized {
+              // a (re-)run batch replaces its clusters' stats and its
+              // ENTIRE segment-id range [segOffset, segOffset + 10000)
+              val st = loadState(indexDir)
+              saveState(indexDir, st.copy(
+                cluster_stats = st.cluster_stats
+                  .filterNot(c => clusters.contains(c.cluster_id)) ++
+                  collected(cacc),
+                segments = (st.segments.filterNot(s =>
+                  s.segment_id >= segOffset && s.segment_id < segOffset + 10000)
+                  ++ collected(acc)).sortBy(_.segment_id)))
+              markDone(indexDir, marker,
+                s"input=$sfDir clusters=${clusters.mkString(",")}")
+              run :+= marker
+            }
           }
         }
+        jobs.foreach(Await.result(_, Duration.Inf))
       }
-      try jobs.foreach(Await.result(_, Duration.Inf))
-      finally spark.conf.set(mpbKey, mpbPrev)
     }
 
     // ---- step 3: dictionary (df/cf/idf from block metadata) ------------
@@ -538,65 +516,7 @@ object IndexBuilder {
           graphF.get, scala.concurrent.duration.Duration.Inf))
     }
 
-    val manifest = ManifestIO.read(s"$indexDir/manifest.json")
-    val totalMillis = (System.nanoTime() - t0) / 1000000L
-    BuildResult(manifest, totalMillis,
-      manifest.num_docs * 1000.0 / math.max(1L, totalMillis), run, skip,
-      stepWin)
-  }
-
-  /** Marker for the compaction fast path — see the
-    * `preAssigned` parameter of [[buildFromSource]]. `transformFrom`
-    * additionally routes the postings step through [[transformBlocks]]:
-    * (source index dir, broadcast sorted tombstone array).
-    */
-  case class PreAssignedSource(
-      transformFrom: Option[(String,
-        org.apache.spark.broadcast.Broadcast[Array[Long]])] = None)
-
-  /** The preAssigned docstore step: the source rows already carry dense
-    * doc_id, cluster_id, doc_len, content_sha — so the step is exactly
-    * ONE job: local sort → partitioned write, no exchange (see below),
-    * with the corpus stats observed on the write like the normal path.
-    * The write observation's row count is REQUIRED to equal knownRows:
-    * a wrong caller-side id shift cannot silently produce a plausible
-    * index. Returns the granule window and the write observation.
-    */
-  private def docstorePreAssigned(
-      spark: SparkSession,
-      source: DataFrame,
-      indexDir: String,
-      centroids: Array[Array[Double]],
-      knownRows: Long): (Long, DocstoreWrite) = {
-    require(knownRows > 0, "preAssigned requires exact knownRows > 0")
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val window = granuleWindow(knownRows, parts)
-    val (observed, written) = observeDocstore(source, centroids.length)
-    // ZERO-exchange write (r7): the source IS the old docstore — its
-    // files are cluster-partitioned and (cluster, doc)-sorted, the
-    // tombstone filter preserves order, and the id shift is monotone,
-    // so every read split is already a sorted run with doc ranges
-    // disjoint across tasks (whole files, or pieces of one sorted
-    // file). The local sort re-states the invariant for free on
-    // already-sorted runs, and partitionBy(cluster_id) writes ~the same
-    // file count the source had. Compaction therefore moves the content
-    // bytes exactly ONCE — old files → new files — with no exchange
-    // anywhere. Stored content_sha rides through unchanged (it is
-    // already materialized — re-deriving it would cost n sha2 calls to
-    // save nothing).
-    observed
-      .sortWithinPartitions(col("cluster_id"), col("doc_id"))
-      .select("doc_id", "repo", "path", "commit", "lang",
-        "content", "cluster_id", "doc_len", "content_sha")
-      .write.mode("overwrite")
-      .partitionBy("cluster_id")
-      .parquet(s"$indexDir/docstore")
-    val w = written()
-    require(w.num_docs == knownRows,
-      s"preAssigned row count ${w.num_docs} != expected $knownRows: " +
-        "the caller's id shift and the source disagree")
-    require(w.min_id >= 0, "preAssigned ids must be dense non-negative")
-    (window, w)
+    clock.result(ManifestIO.read(s"$indexDir/manifest.json"), run, skip)
   }
 
   /** The docstore write of the build and of
@@ -652,8 +572,7 @@ object IndexBuilder {
       .drop("_slot")
       .sortWithinPartitions(col("cluster_id"), col("doc_id"))
       .withColumn("content_sha", sha2(col("content"), 256))
-      .select("doc_id", "repo", "path", "commit", "lang",
-        "content", "cluster_id", "doc_len", "content_sha")
+      .select(DocstoreColumns.map(col): _*)
       .write.mode(mode)
       .partitionBy("cluster_id")
       .parquet(s"$indexDir/docstore")
@@ -666,6 +585,12 @@ object IndexBuilder {
         "the source is not deterministic across jobs")
     w
   }
+
+  /** The docstore's write column order (cluster_id becomes the
+    * partition directory).
+    */
+  private[graft] val DocstoreColumns = Seq("doc_id", "repo", "path",
+    "commit", "lang", "content", "cluster_id", "doc_len", "content_sha")
 
   /** What a docstore write observed: rows, Σ doc_len, the smallest
     * doc_id and `doc_counts(c)` = rows in cluster c.
@@ -680,7 +605,7 @@ object IndexBuilder {
     * itself. The returned thunk blocks until an action on the returned
     * frame has run.
     */
-  private def observeDocstore(docs: DataFrame, kc: Int): (DataFrame, () => DocstoreWrite) = {
+  private[graft] def observeDocstore(docs: DataFrame, kc: Int): (DataFrame, () => DocstoreWrite) = {
     val obs = Observation()
     val metrics =
       count(lit(1)).as("n") +: sum(col("doc_len")).as("sum_dl") +:
@@ -879,19 +804,19 @@ object IndexBuilder {
       }
   }
 
-  /** Compaction's postings path (r7): instead of re-tokenizing the
-    * compacted corpus, DECODE the source index's existing blocks, drop
-    * tombstoned entries, shift surviving doc ids (monotone, so decoded
-    * ascending runs stay ascending and per-(cluster, term) doc ranges
-    * stay disjoint across tasks), regroup by the NEW granule window and
-    * re-encode under the refreshed avgdl, with zero exchanges. At
-    * scale this replaces a full content pass (tokenize over every
-    * surviving document) with a pass over the compressed postings,
-    * which are a fraction of the content bytes; correctness needs only
-    * the decoded (doc, tf, dl, positions) tuples, all of which the
-    * blocks store losslessly. Segment merge runs the same transform
-    * with no tombstones over granule-exchanged blocks, so each
-    * (cluster, granule, term) run is re-encoded whole in one task.
+  /** The postings rewrite of compaction and segment merge (r7): instead
+    * of re-tokenizing the corpus, DECODE the source index's existing
+    * blocks, drop tombstoned entries, shift surviving doc ids (monotone,
+    * so decoded ascending runs stay ascending and per-(cluster, term)
+    * doc ranges stay disjoint across tasks), regroup by the granule
+    * window and re-encode under `avgdl`. At scale this replaces a full
+    * content pass (tokenize over every surviving document) with a pass
+    * over the compressed postings, which are a fraction of the content
+    * bytes; correctness needs only the decoded (doc, tf, dl, positions)
+    * tuples, all of which the blocks store losslessly. Compaction runs
+    * it over the plain scan (no exchange); segment merge with no
+    * tombstones over granule-exchanged blocks, so each (cluster,
+    * granule, term) run is re-encoded whole in one task.
     */
   def transformBlocks(
       spark: SparkSession,
@@ -935,33 +860,49 @@ object IndexBuilder {
     val tmp = s"$indexDir/dictionary_tmp"
     val obs = Observation()
     // read-task sizing: the scan touches three tiny metadata columns of
-    // the postings files; the session's fine-grained maxPartitionBytes
-    // (tuned for content scans) fragments it into ~80 near-empty tasks
-    // whose scheduling overhead dominates the sub-second aggregation
-    val mpbKey = "spark.sql.files.maxPartitionBytes"
-    val mpbPrev = spark.conf.get(mpbKey)
-    val postingsBytes = org.apache.commons.io.FileUtils
-      .sizeOfDirectory(new java.io.File(s"$indexDir/postings"))
-    val parts = spark.sessionState.conf.numShufflePartitions
-    spark.conf.set(mpbKey,
-      math.max(4L << 20, postingsBytes / math.max(1, parts)).toString)
-    try IndexSchemas.readPostings(spark, indexDir)
-      .groupBy(col("term"))
-      .agg(sum(col("count")).as("df"), sum(col("tf_sum")).as("cf"))
-      .withColumn("idf", Bm25.idfCol(lit(n), col("df")))
-      .observe(obs, count(lit(1)).as("vocab"))
-      .write.mode("overwrite").parquet(tmp)
-    finally spark.conf.set(mpbKey, mpbPrev)
-    // swap: move the live dir ASIDE first, then the new one in, then
-    // drop the aside copy — a crash mid-swap leaves a recoverable
-    // dictionary_old instead of no dictionary at all [ADVICE r1]
-    val target = Paths.get(s"$indexDir/dictionary")
-    val aside = Paths.get(s"$indexDir/dictionary_old")
-    org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
-    if (Files.exists(target)) Files.move(target, aside)
-    Files.move(Paths.get(tmp), target)
-    org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
+    // the postings files; the session's fine-grained split size (tuned
+    // for content scans) fragments it into ~80 near-empty tasks whose
+    // scheduling overhead dominates the sub-second aggregation
+    withReadSplit(spark, s"$indexDir/postings", 4L << 20) {
+      IndexSchemas.readPostings(spark, indexDir)
+        .groupBy(col("term"))
+        .agg(sum(col("count")).as("df"), sum(col("tf_sum")).as("cf"))
+        .withColumn("idf", Bm25.idfCol(lit(n), col("df")))
+        .observe(obs, count(lit(1)).as("vocab"))
+        .write.mode("overwrite").parquet(tmp)
+    }
+    swapIn(tmp, s"$indexDir/dictionary")
     obs.get("vocab").asInstanceOf[Long]
+  }
+
+  /** Runs `body` with the file-scan split size
+    * (`spark.sql.files.maxPartitionBytes`) set to dir's bytes per
+    * shuffle partition, at least `floor`, then restores the session's
+    * value: a scan of `dir` then runs about one task per partition.
+    */
+  private[graft] def withReadSplit[T](spark: SparkSession, dir: String,
+      floor: Long)(body: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.get(key)
+    val bytes = org.apache.commons.io.FileUtils
+      .sizeOfDirectory(new java.io.File(dir))
+    val parts = spark.sessionState.conf.numShufflePartitions
+    spark.conf.set(key, math.max(floor, bytes / math.max(1, parts)).toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  /** Replaces the directory `target` with `staged`: the live dir moves
+    * ASIDE first, then the new one in, then the aside copy is dropped —
+    * a crash mid-swap leaves a recoverable `<target>_old` instead of no
+    * directory at all [ADVICE r1].
+    */
+  private[graft] def swapIn(staged: String, target: String): Unit = {
+    val live = Paths.get(target)
+    val aside = Paths.get(s"${target}_old")
+    org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
+    if (Files.exists(live)) Files.move(live, aside)
+    Files.move(Paths.get(staged), live)
+    org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
   }
 
   /** Partition metas from per-cluster doc counts and encode stats; the

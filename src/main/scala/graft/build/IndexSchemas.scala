@@ -9,9 +9,7 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * (WAND, phrase, compact, dictionary refresh) re-open these tables on
   * every invocation. The schemas are fixed by the writers (model case
   * classes + the docstore column list), so inference re-derives a
-  * constant. Read resolution is by name, which also absorbs the
-  * column-order difference between build-path and append-path docstore
-  * files.
+  * constant. Read resolution is by name.
   */
 object IndexSchemas {
 

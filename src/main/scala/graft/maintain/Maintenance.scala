@@ -2,10 +2,12 @@ package graft.maintain
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.build.{ClusterStat, IndexBuilder, JsonFiles, ManifestIO}
+import graft.build.{ClusterStat, IndexBuilder, IndexSchemas, InputLineage,
+  JsonFiles, ManifestIO, SegmentMeta}
 import graft.sources.Corpus
 
 /** Incremental index maintenance — the graft of the reference's point
@@ -24,10 +26,12 @@ import graft.sources.Corpus
   *    visibility-only delete; queries filter tombstoned docs before
   *    top-k selection.
   *  - [[compact]] = the deferred id-shift (M8,
-  *    /root/reference/src/utils.jl:16-20): rebuilds into a new snapshot
-  *    directory with survivors re-ranked DENSE IN OLD-ID ORDER —
-  *    identical semantics to the reference's "shift all higher ids
-  *    down", executed as one batch job instead of per-delete.
+  *    /root/reference/src/utils.jl:16-20): rewrites the index into a
+  *    new snapshot directory with survivors re-ranked DENSE IN OLD-ID
+  *    ORDER — identical semantics to the reference's "shift all higher
+  *    ids down", executed as one batch rewrite instead of per-delete. A
+  *    docstore shift-rewrite plus the postings rewrite merge shares; the
+  *    centroids and coarse graph carry over, nothing is retrained.
   *  - [[fetchDocs]] = `_decode_point` (M7): the docstore is lossless, so
   *    reconstruction is exact (the reference's PQ reconstruction is
   *    lossy).
@@ -82,7 +86,7 @@ object Maintenance {
     val segOffset = (manifest.segments.map(_.segment_id) :+ 0).max + 1
     // avgdl is held until compaction
     val (blocks, acc, cacc) = IndexBuilder.encodeBlocks(spark,
-      graft.build.IndexSchemas.readDocstore(spark, indexDir)
+      IndexSchemas.readDocstore(spark, indexDir)
         .filter(col("doc_id") >= manifest.num_docs),
       manifest.avgdl, segOffset, window)
     blocks.write.mode("append")
@@ -114,8 +118,8 @@ object Maintenance {
     * (cluster, granule, term), WITHOUT touching the docstore or docIDs.
     * Also refreshes avgdl/idf exactly over the current corpus (append
     * holds them stale by design). It is compaction's block transform
-    * ([[IndexBuilder.transformBlocks]]) with no tombstones over the
-    * postings hash-exchanged on their granule key: no tokenize pass.
+    * ([[rewritePostings]]) with no tombstones over the postings
+    * hash-exchanged on their granule key: no tokenize pass.
     * The manifest gets the transform's segments and per-cluster block
     * stats; doc counts, centroids and the graph carry over.
     */
@@ -124,7 +128,7 @@ object Maintenance {
     val window = manifest0.granule_window
 
     // exact refreshed stats (Long sums → deterministic)
-    val statsRow = graft.build.IndexSchemas.readDocstore(spark, indexDir)
+    val statsRow = IndexSchemas.readDocstore(spark, indexDir)
       .agg(count(lit(1)), sum(col("doc_len"))).head()
     val n = statsRow.getLong(0)
     val sumDl = statsRow.getLong(1)
@@ -135,23 +139,10 @@ object Maintenance {
     // re-encoded whole; merged blocks stay granule-contained (the
     // query-side split key relies on it). Tombstoned docs stay in the
     // postings: queries filter them until compaction.
-    val (merged, acc, cacc) = IndexBuilder.transformBlocks(spark,
-      graft.build.IndexSchemas.readPostings(spark, indexDir)
+    val (segments, clusterStats) = rewritePostings(spark,
+      IndexSchemas.readPostings(spark, indexDir)
         .repartition(col("cluster_id"), expr(s"first_doc div $window")),
-      spark.sparkContext.broadcast(Array.empty[Long]), avgdl,
-      segmentOffset = 0, window)
-
-    // write to a sibling dir, then swap: live dir moves ASIDE first so a
-    // crash mid-swap leaves a recoverable postings_old, never a missing
-    // postings dir [ADVICE r1]
-    val tmp = s"$indexDir/postings_merged"
-    merged.write.mode("overwrite").partitionBy("cluster_id").parquet(tmp)
-    val old = Paths.get(s"$indexDir/postings")
-    val aside = Paths.get(s"$indexDir/postings_old")
-    org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
-    if (Files.exists(old)) Files.move(old, aside)
-    Files.move(Paths.get(tmp), old)
-    org.apache.commons.io.FileUtils.deleteQuietly(aside.toFile)
+      spark.sparkContext.broadcast(Array.empty[Long]), avgdl, window, indexDir)
 
     ManifestIO.write(s"$indexDir/manifest.json", manifest0.copy(
       num_docs = n,
@@ -159,63 +150,108 @@ object Maintenance {
       vocab_size = IndexBuilder.writeDictionary(spark, indexDir, n),
       partitions = IndexBuilder.partitionMetas(
         manifest0.partitions.map(p => p.cluster_id -> p.num_docs),
-        IndexBuilder.collected(cacc)),
-      segments = IndexBuilder.collected(acc).sortBy(_.segment_id)))
+        clusterStats),
+      segments = segments))
   }
 
   /** M5/M8 compaction: survivors re-ranked dense in OLD-id order into a
-    * fresh snapshot directory (avgdl/idf refreshed there). The
-    * tombstone set defaults to the index's tombstones.json; passing
-    * `deadOverride` compacts against an explicit set WITHOUT mutating
-    * the source index (read-only source — e.g. benchmark harnesses that
-    * must not leave tombstones behind for later queries).
+    * fresh snapshot directory `outDir`. Like the reference's
+    * `delete_from_index!` (/root/reference/src/utils.jl:90-105) it only
+    * shifts ids and retrains nothing: a rewrite, not a build. Steps:
+    *  - `docstore`: ids through the broadcast tombstone shift (dead rows
+    *    dropped), local sort, write — no exchange: the source files are
+    *    (cluster, doc)-sorted runs and the shift is monotone;
+    *  - `postings`: the source blocks decoded, shifted and re-encoded
+    *    ([[rewritePostings]], shared with [[mergeSegments]]);
+    *  - `dictionary`, then `manifest`: the source manifest with what the
+    *    steps observed; centroids and the coarse graph carry over.
+    * An all-tombstoned index compacts to a valid empty index.
+    * `deadOverride` compacts against an explicit set (default: the
+    * index's tombstones.json) WITHOUT mutating the source index.
     */
   def compact(spark: SparkSession, indexDir: String, outDir: String,
       deadOverride: Option[Set[Long]] = None): IndexBuilder.BuildResult = {
+    val clock = new IndexBuilder.StepClock("compact")
     val dead = deadOverride.getOrElse(loadTombstones(indexDir))
     // survivor count from the manifest, EXACT for any dead set: docstore
     // ids are dense 0..n-1, so only dead ids inside that range remove
     // rows — a deadOverride carrying absent ids (which bypasses
-    // delete()'s validation) must not shrink the hint [ADVICE r4]
+    // delete()'s validation) must not shrink it [ADVICE r4]
     val manifest = ManifestIO.read(s"$indexDir/manifest.json")
-    val n = manifest.num_docs
-    val deadArr = dead.filter(id => id >= 0 && id < n).toArray.sorted
-    // r7 fast path: the docstore already holds dense old ids 0..n-1 AND
-    // every derived column compaction would recompute (content_sha,
-    // doc_len, cluster_id — all deterministic, centroids are FIXED like
-    // the reference's never-retraining delete,
-    // /root/reference/src/utils.jl:90-105). The new dense id in old-id
-    // order is a pure shift (old_id − #dead below it), so one broadcast
-    // sorted tombstone array serves BOTH the tombstone filter (the old
-    // anti-join) and the id re-rank (the old keys-pass + rank collect):
-    // the whole docstore side of the rebuild collapses to one map-side
-    // expression + the docstore write.
+    val deadArr = dead.filter(id => id >= 0 && id < manifest.num_docs)
+      .toArray.sorted
+    val kept = manifest.num_docs - deadArr.length
     val deadBc = spark.sparkContext.broadcast(deadArr)
-    val survivors = graft.build.IndexSchemas.readDocstore(spark, indexDir)
-      .withColumn("_nid",
-        graft.functions.TombstoneShiftExpr.col(col("doc_id"), deadBc))
-      .filter(col("_nid") >= 0)
-      .select(col("_nid").as("doc_id"),
-        col("repo"), col("path"), col("commit"), col("lang"),
-        col("content"), col("cluster_id"), col("doc_len"),
-        col("content_sha"))
-    IndexBuilder.buildFromSource(spark, survivors, outDir,
-      IndexBuilder.BuildConfig(resume = false,
-        distance = graft.cluster.Distance.byName(manifest.distance)),
-      idOrder = Seq("doc_id"),
-      lineageName = s"compact($indexDir)",
-      knownRows = n - deadArr.length,
-      fixedCentroids = Some(manifest.centroids),
-      preAssigned = Some(IndexBuilder.PreAssignedSource(
-        // postings via decode→shift→re-encode of the source blocks —
-        // the docstore write above is then compaction's ONLY content
-        // pass (see IndexBuilder.transformBlocks)
-        transformFrom = Some((indexDir, deadBc)))))
+    val window = IndexBuilder.granuleWindow(kept,
+      spark.sessionState.conf.numShufflePartitions)
+
+    val written = clock("docstore") {
+      // stored cluster_id, doc_len and content_sha ride through unchanged
+      val (survivors, written) = IndexBuilder.observeDocstore(
+        IndexSchemas.readDocstore(spark, indexDir)
+          .withColumn("doc_id",
+            graft.functions.TombstoneShiftExpr.col(col("doc_id"), deadBc))
+          .filter(col("doc_id") >= 0), manifest.kc)
+      survivors
+        .sortWithinPartitions(col("cluster_id"), col("doc_id"))
+        .select(IndexBuilder.DocstoreColumns.map(col): _*)
+        .write.mode("overwrite")
+        .partitionBy("cluster_id")
+        .parquet(s"$outDir/docstore")
+      val w = written()
+      // a wrong id shift must not silently produce a plausible index
+      require(w.num_docs == kept, s"compacted row count ${w.num_docs} != " +
+        s"expected $kept: the tombstone shift and the docstore disagree")
+      require(w.min_id >= 0, "compacted ids must be dense non-negative")
+      w
+    }
+    // an empty index stores 0.0: NaN would not round-trip through JSON
+    val avgdl = if (kept > 0) written.sum_dl.toDouble / kept else 0.0
+    val (segments, clusterStats) = clock("postings") {
+      IndexBuilder.withReadSplit(spark, s"$indexDir/postings", 1L << 20)(
+        rewritePostings(spark, IndexSchemas.readPostings(spark, indexDir),
+          deadBc, avgdl, window, outDir))
+    }
+    val vocab = clock("dictionary") {
+      IndexBuilder.writeDictionary(spark, outDir, kept)
+    }
+    val compacted = clock("manifest") {
+      val m = manifest.copy(
+        num_docs = kept,
+        avgdl = avgdl,
+        granule_window = window,
+        vocab_size = vocab,
+        partitions = IndexBuilder.partitionMetas(written.perCluster,
+          clusterStats),
+        segments = segments,
+        lineage = InputLineage(s"compact($indexDir)", kept))
+      ManifestIO.write(s"$outDir/manifest.json", m)
+      m
+    }
+    clock.result(compacted)
+  }
+
+  /** The postings rewrite of [[mergeSegments]] and [[compact]]:
+    * [[IndexBuilder.transformBlocks]] over `blocks` (ids in `dead`
+    * dropped, the rest shifted down), written to a sibling dir and
+    * swapped into `outDir/postings`. Returns the segments and the
+    * per-cluster block stats the transform reported.
+    */
+  private def rewritePostings(spark: SparkSession, blocks: DataFrame,
+      dead: Broadcast[Array[Long]], avgdl: Double, window: Long,
+      outDir: String): (Seq[SegmentMeta], Seq[ClusterStat]) = {
+    val (rewritten, acc, cacc) = IndexBuilder.transformBlocks(spark, blocks,
+      dead, avgdl, segmentOffset = 0, window)
+    val staged = s"$outDir/postings_rewrite"
+    rewritten.write.mode("overwrite").partitionBy("cluster_id").parquet(staged)
+    IndexBuilder.swapIn(staged, s"$outDir/postings")
+    (IndexBuilder.collected(acc).sortBy(_.segment_id),
+      IndexBuilder.collected(cacc))
   }
 
   /** M7: exact reconstruction from the lossless docstore. */
   def fetchDocs(spark: SparkSession, indexDir: String, docIds: Seq[Long]): Array[Row] =
-    graft.build.IndexSchemas.readDocstore(spark, indexDir)
+    IndexSchemas.readDocstore(spark, indexDir)
       .filter(col("doc_id").isin(docIds: _*))
       .orderBy("doc_id")
       .collect()
@@ -223,7 +259,7 @@ object Maintenance {
   private def liveIds(spark: SparkSession, indexDir: String) = {
     val dead = loadTombstones(indexDir)
     import spark.implicits._
-    graft.build.IndexSchemas.readDocstore(spark, indexDir)
+    IndexSchemas.readDocstore(spark, indexDir)
       .join(broadcast(dead.toSeq.toDF("doc_id")), Seq("doc_id"), "left_anti")
   }
 
@@ -249,8 +285,7 @@ object Maintenance {
   /** M2 `pushfirst!`: prepend — new docs get ids 0..k-1, ALL existing
     * ids shift up by k (/root/reference/src/utils.jl:2-6). Inherently a
     * full rewrite (the reference warns the same); expressed as one
-    * compaction-style rebuild into `outDir` ordered (new-first, then
-    * old ids).
+    * rebuild into `outDir` ordered (new-first, then old ids).
     */
   def prepend(spark: SparkSession, indexDir: String,
       newSource: DataFrame, outDir: String): IndexBuilder.BuildResult = {

@@ -158,7 +158,8 @@ object IvfAdc {
     * (stride-sample ∪ queryIds) and the rows are split driver-side, so
     * when the guard limit does not bind (the normal path — it is sized
     * up by |queryIds|) the training sample is EXACTLY the one [[build]]
-    * collects and the model is bit-identical.
+    * collects and the model is bit-identical. When the limit binds, it
+    * falls back to [[build]] plus a separate query collect.
     */
   def buildWithQueries(
       spark: SparkSession,
@@ -180,17 +181,27 @@ object IvfAdc {
       embeddings.count())
     val stride = math.max(1L, nVecs / sampleCap)
     val qSet = queryIds.toSet
+    def queries(rows: Array[(Long, Array[Float])]) =
+      rows.filter(r => qSet.contains(r._1)).sortBy(_._1)
+        .map { case (id, v) => (id.toInt, v) }.toSeq
+    val limit = 2 * sampleCap + queryIds.size
     val rows = ds
       .filter(col("vec_id") % stride === 0 ||
         col("vec_id").isin(queryIds: _*))
-      .limit(2 * sampleCap + queryIds.size)
+      .limit(limit)
       .collect()
-    val sample = rows.filter(_._1 % stride == 0).sortBy(_._1)
-    val qs = rows.filter(r => qSet.contains(r._1)).sortBy(_._1)
-      .map { case (id, v) => (id.toInt, v) }.toSeq
-    val (model, encoded) = buildFromSample(spark, ds, kc, m, k, maxIter,
-      quantDist, method, sample)
-    (model, encoded, qs)
+    if (rows.length >= limit) {
+      // truncated rows: neither build()'s sample nor sure to hold every query
+      val (model, encoded) = build(spark, embeddings, kc, m, k, maxIter,
+        sampleCap, quantDist, method)
+      (model, encoded,
+        queries(ds.filter(col("vec_id").isin(queryIds: _*)).collect()))
+    } else {
+      val sample = rows.filter(_._1 % stride == 0).sortBy(_._1)
+      val (model, encoded) = buildFromSample(spark, ds, kc, m, k, maxIter,
+        quantDist, method, sample)
+      (model, encoded, queries(rows))
+    }
   }
 
   /** ADC top-k for a batch of queries over the encoded Dataset.

@@ -17,6 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Keeps the build checkpoint layout in one module: `_checkpoints/` is
   * the build's scratch, and a built index's state is its manifest.
+  *
+  * Keeps the session's file-scan split size under one helper,
+  * `IndexBuilder.withReadSplit`, which restores what it changed.
   */
 class EnvLeverSpec extends AnyFunSuite {
 
@@ -60,5 +63,31 @@ class EnvLeverSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
     assert(files.exists(f => f.getFileName.toString == "IndexBuilder.scala" &&
       matching(f, "_checkpoints".r).nonEmpty))
+  }
+
+  test("maxPartitionBytes appears in src/main/scala only in IndexBuilder.withReadSplit") {
+    val key = "maxPartitionBytes".r
+    val offenders = files
+      .filterNot(f => Set("Bench.scala", "IndexBuilder.scala")(
+        f.getFileName.toString))
+      .flatMap(f => matching(f, key).map { case (n, l) => s"$f:$n: $l" })
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    // in IndexBuilder.scala: only from the helper's scaladoc to the end
+    // of its body
+    val ib = files.filter(_.getFileName.toString == "IndexBuilder.scala")
+    assert(ib.size == 1)
+    val lines = new String(Files.readAllBytes(ib.head), StandardCharsets.UTF_8)
+      .split("\n").toSeq
+    val defAt = lines.indexWhere(_.contains("def withReadSplit"))
+    assert(defAt > 0, "IndexBuilder.withReadSplit not found")
+    val from = lines.lastIndexWhere(_.trim.startsWith("/**"), defAt) + 1
+    val to = lines.indexWhere(_ == "  }", defAt) + 1
+    val outside = matching(ib.head, key).filterNot { case (n, _) =>
+      n >= from && n <= to
+    }
+    assert(outside.isEmpty, outside.mkString("\n"))
+    assert(matching(ib.head, key).exists { case (n, l) =>
+      n > defAt && n <= to && l.contains("\"spark.sql.files.maxPartitionBytes\"")
+    })
   }
 }

@@ -15,6 +15,8 @@ import graft.sources.Corpus
 /** F6 maintenance fixture (FIXTURES.md): delete head/middle/tail ranges,
   * compact, assert dense ids + postings follow their docs + query parity
   * with a fresh rebuild. Mirrors /root/reference/test/utils.jl:58-106.
+  * Also pins compaction's parts: the tombstone shift, the docstore
+  * rewrite, the postings transform and the frozen coarse quantizer.
   */
 class MaintenanceSpec extends SparkSpec {
 
@@ -224,11 +226,11 @@ class MaintenanceSpec extends SparkSpec {
     assert(shas.toSeq == exp)
   }
 
-  test("manifest matches disk after build, append, delete, append and merge") {
+  test("manifest matches disk after build, append, delete, append, merge and compact") {
     import spark.implicits._
     val dir = freshIndex()
     // the reference: what the manifest recompute scans derived from disk
-    def check(step: String): Unit = {
+    def check(dir: String, step: String): Unit = {
       val m = ManifestIO.read(s"$dir/manifest.json")
       val postings = IndexSchemas.readPostings(spark, dir)
       val bytes = length(col("doc_gaps")) + length(col("tfs")) +
@@ -270,17 +272,188 @@ class MaintenanceSpec extends SparkSpec {
       (s"repo-$tag", s"src/$tag/b.c", s"${tag}00000002", "c",
         s"melody xylophone join hash $tag"))
       .toDF("repo", "path", "commit", "lang", "content")
-    check("build")
+    check(dir, "build")
     val n = ManifestIO.read(s"$dir/manifest.json").num_docs
     Maintenance.append(spark, dir, batch("a1"))
-    check("append 1")
+    check(dir, "append 1")
     Maintenance.delete(dir, Seq(3L, n))
-    check("delete")
+    check(dir, "delete")
     Maintenance.append(spark, dir, batch("a2"))
-    check("append 2")
+    check(dir, "append 2")
     Maintenance.mergeSegments(spark, dir)
-    check("merge")
+    check(dir, "merge")
     assert(ManifestIO.read(s"$dir/manifest.json").num_docs == n + 4)
+    val out = Files.createTempDirectory("graft-maint-check").toString
+    Maintenance.compact(spark, dir, out)
+    check(out, "compact")
+    assert(ManifestIO.read(s"$out/manifest.json").num_docs == n + 2)
+  }
+
+  test("TombstoneShiftExpr.shift == rank among survivors in old-id order") {
+    val dead = Array(0L, 3L, 4L, 9L, 17L)
+    val n = 20L
+    val survivors = (0L until n).filterNot(dead.contains)
+    survivors.zipWithIndex.foreach { case (old, rank) =>
+      assert(graft.functions.TombstoneShiftExpr.shift(dead, old) == rank,
+        s"old=$old")
+    }
+    dead.foreach { d =>
+      assert(graft.functions.TombstoneShiftExpr.shift(dead, d) ==
+        graft.functions.TombstoneShiftExpr.Dead)
+    }
+    // empty dead set: identity
+    (0L until 5L).foreach { id =>
+      assert(graft.functions.TombstoneShiftExpr.shift(Array.emptyLongArray, id) == id)
+    }
+  }
+
+  test("compact docstore == dense re-rank of survivors") {
+    val idx = Files.createTempDirectory("graft-maint-cidx").toString
+    val out = Files.createTempDirectory("graft-maint-cout").toString
+    try {
+      IndexBuilder.build(spark, sf0001, idx,
+        IndexBuilder.BuildConfig(resume = false))
+      val dead = Set(1L, 2L, 10L, 49L)
+      Maintenance.compact(spark, idx, out,
+        deadOverride = Some(dead))
+      // expectation derived INDEPENDENTLY of the shift expression: anti
+      // join + window re-rank over the source docstore
+      val src = spark.read.parquet(s"$idx/docstore")
+      val expected = src
+        .filter(!col("doc_id").isin(dead.toSeq: _*))
+        .withColumn("new_id",
+          (row_number().over(org.apache.spark.sql.expressions.Window
+            .orderBy(col("doc_id"))) - 1).cast("long"))
+        .select(col("new_id"), col("content_sha"), col("cluster_id"),
+          col("doc_len"))
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2),
+          r.getInt(3))).sortBy(_._1)
+      val got = spark.read.parquet(s"$out/docstore")
+        .select(col("doc_id"), col("content_sha"), col("cluster_id"),
+          col("doc_len"))
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2),
+          r.getInt(3))).sortBy(_._1)
+      assert(got.toSeq == expected.toSeq)
+      // manifest-level invariants: count, avgdl refreshed exactly
+      val m = ManifestIO.read(s"$out/manifest.json")
+      assert(m.num_docs == expected.length)
+      val sumDl = expected.map(_._4.toLong).sum
+      assert(m.avgdl == sumDl.toDouble / expected.length)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idx))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    }
+  }
+
+  test("compact postings transform == decode-shift of source postings") {
+    import spark.implicits._
+    val idx = Files.createTempDirectory("graft-maint-tidx").toString
+    val out = Files.createTempDirectory("graft-maint-tout").toString
+    try {
+      IndexBuilder.build(spark, sf0001, idx,
+        IndexBuilder.BuildConfig(resume = false))
+      val dead = Set(0L, 7L, 8L, 100L)
+      Maintenance.compact(spark, idx, out,
+        deadOverride = Some(dead))
+      val deadArr = dead.toArray.sorted
+      def decoded(dir: String): Seq[(String, Int, Long, Int, String)] =
+        graft.build.IndexSchemas.readPostings(spark, dir)
+          .as[graft.model.PostingBlock].collect().toSeq
+          .flatMap { b =>
+            graft.codec.PostingCodec.decodeEntries(b).map(e =>
+              (b.term, b.cluster_id, e.doc, e.tf,
+                e.positions.mkString(",")))
+          }
+      // expectation: source entries, dead dropped, ids shifted
+      val expected = decoded(idx).flatMap { case (t, c, d, tf, pos) =>
+        val nid = graft.functions.TombstoneShiftExpr.shift(deadArr, d)
+        if (nid < 0) None else Some((t, c, nid, tf, pos))
+      }.sorted
+      assert(decoded(out).sorted == expected)
+      // and every block stays inside one NEW granule (the query-side
+      // split invariant)
+      val w = ManifestIO.read(s"$out/manifest.json").granule_window
+      graft.build.IndexSchemas.readPostings(spark, out)
+        .as[graft.model.PostingBlock].collect().foreach { b =>
+          assert(b.first_doc / w == b.last_doc / w,
+            s"block crosses granules: ${b.term} ${b.first_doc}..${b.last_doc}")
+        }
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idx))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    }
+  }
+
+  test("compact reuses the coarse quantizer: centroids frozen, assignments stable") {
+    val dir = Files.createTempDirectory("graft-maint-qidx").toString
+    IndexBuilder.build(spark, sf0001, dir,
+      IndexBuilder.BuildConfig(resume = false))
+    val m0 = ManifestIO.read(s"$dir/manifest.json")
+    val out = Files.createTempDirectory("graft-maint-qout").toString
+    // dead set includes an id ABSENT from the index: a deadOverride
+    // bypasses delete()'s validation, and the survivor-count hint must
+    // not shrink for it [ADVICE r4]
+    val dead = Set(0L, 5L, 7L, 999999L)
+    val res = Maintenance.compact(spark, dir, out, deadOverride = Some(dead))
+    // four sequential steps, each window after its predecessor's end
+    assert(res.stepWindows.map(_._1) ==
+      Seq("docstore", "postings", "dictionary", "manifest"))
+    res.stepWindows.foreach { case (s, lo, hi) => assert(hi >= lo, s) }
+    res.stepWindows.sliding(2).foreach {
+      case Seq((_, _, hiA), (b, loB, _)) => assert(loB >= hiA, b)
+      case _ =>
+    }
+    val m1 = ManifestIO.read(s"$out/manifest.json")
+    assert(m1.num_docs == m0.num_docs - 3)
+    // no retrain: kc and every centroid bit-identical to the source index
+    assert(m1.kc == m0.kc)
+    assert(m1.centroids.length == m0.centroids.length &&
+      m1.centroids.zip(m0.centroids).forall { case (a, b) => a.sameElements(b) })
+    assert(m1.distance == m0.distance)
+    // no granule-weights side file: nothing reads it
+    Seq(dir, out).foreach { d =>
+      assert(!Files.exists(java.nio.file.Paths.get(d, "_checkpoints",
+        "granuleweights.json")), d)
+    }
+    // per-doc assignments stable across compaction (same content, same
+    // centroids ⇒ same cell — the reference's delete never moves points
+    // between inverted lists, /root/reference/src/utils.jl:90-105)
+    val before = spark.read.parquet(s"$dir/docstore")
+      .select(col("content_sha"), col("cluster_id").as("c0"))
+    val after = spark.read.parquet(s"$out/docstore")
+      .select(col("content_sha"), col("cluster_id").as("c1"))
+    val moved = before.join(after, "content_sha")
+      .filter(col("c0") =!= col("c1")).count()
+    assert(moved == 0, s"$moved docs changed cluster across compaction")
+    // compaction is not a build: the coarse graph carries over and the
+    // compacted dir holds no build checkpoint
+    assert(m1.coarse_graph.map(_.toSeq).toSeq ==
+      m0.coarse_graph.map(_.toSeq).toSeq)
+    assert(m1.coarse_graph_upper.map(_.map(_.toSeq).toSeq).toSeq ==
+      m0.coarse_graph_upper.map(_.map(_.toSeq).toSeq).toSeq)
+    assert(!Files.exists(java.nio.file.Paths.get(out, "_checkpoints")))
+  }
+
+  test("compacting an all-tombstoned index yields a valid empty index") {
+    val dir = freshIndex()
+    val m0 = ManifestIO.read(s"$dir/manifest.json")
+    Maintenance.delete(dir, 0L until m0.num_docs)
+    val out = Files.createTempDirectory("graft-maint-empty").toString
+    Maintenance.compact(spark, dir, out)
+    val m = ManifestIO.read(s"$out/manifest.json")
+    assert(m.num_docs == 0)
+    assert(m.avgdl == 0.0)
+    assert(m.vocab_size == 0)
+    assert(m.partitions.isEmpty)
+    assert(m.segments.isEmpty)
+    assert(m.centroids.length == m0.centroids.length)
+    assert(IndexSchemas.readDocstore(spark, out).count() == 0)
+    assert(IndexSchemas.readPostings(spark, out).count() == 0)
+    assert(IndexSchemas.readDictionary(spark, out).count() == 0)
+    Seq(Int.MaxValue, 1).foreach { w =>
+      assert(IndexSearcher.topK(spark, out, QuerySet.queries, 10, w = w)
+        .collect().isEmpty, s"w=$w")
+    }
   }
 
   test("concurrent deletes into one index all land") {

@@ -1,111 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
-
-import graft.build.{IndexBuilder, ManifestIO}
 
 /** Round-7 optimization pins: every r7 rewrite must be output-identical
   * to the form it replaced — these tests state each equivalence
   * directly (the oracle hash-match states it end-to-end).
   */
 class Round7Spec extends SparkSpec {
-
-  test("TombstoneShiftExpr.shift == rank among survivors in old-id order") {
-    val dead = Array(0L, 3L, 4L, 9L, 17L)
-    val n = 20L
-    val survivors = (0L until n).filterNot(dead.contains)
-    survivors.zipWithIndex.foreach { case (old, rank) =>
-      assert(graft.functions.TombstoneShiftExpr.shift(dead, old) == rank,
-        s"old=$old")
-    }
-    dead.foreach { d =>
-      assert(graft.functions.TombstoneShiftExpr.shift(dead, d) ==
-        graft.functions.TombstoneShiftExpr.Dead)
-    }
-    // empty dead set: identity
-    (0L until 5L).foreach { id =>
-      assert(graft.functions.TombstoneShiftExpr.shift(Array.emptyLongArray, id) == id)
-    }
-  }
-
-  test("compact fast path == dense re-rank of survivors (docstore content)") {
-    val idx = Files.createTempDirectory("graft-r7-cidx").toString
-    val out = Files.createTempDirectory("graft-r7-cout").toString
-    try {
-      IndexBuilder.build(spark, sf0001, idx,
-        IndexBuilder.BuildConfig(resume = false))
-      val dead = Set(1L, 2L, 10L, 49L)
-      graft.maintain.Maintenance.compact(spark, idx, out,
-        deadOverride = Some(dead))
-      // expectation derived INDEPENDENTLY of the shift expression: anti
-      // join + window re-rank over the source docstore
-      val src = spark.read.parquet(s"$idx/docstore")
-      val expected = src
-        .filter(!col("doc_id").isin(dead.toSeq: _*))
-        .withColumn("new_id",
-          (row_number().over(org.apache.spark.sql.expressions.Window
-            .orderBy(col("doc_id"))) - 1).cast("long"))
-        .select(col("new_id"), col("content_sha"), col("cluster_id"),
-          col("doc_len"))
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2),
-          r.getInt(3))).sortBy(_._1)
-      val got = spark.read.parquet(s"$out/docstore")
-        .select(col("doc_id"), col("content_sha"), col("cluster_id"),
-          col("doc_len"))
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2),
-          r.getInt(3))).sortBy(_._1)
-      assert(got.toSeq == expected.toSeq)
-      // manifest-level invariants: count, avgdl refreshed exactly
-      val m = ManifestIO.read(s"$out/manifest.json")
-      assert(m.num_docs == expected.length)
-      val sumDl = expected.map(_._4.toLong).sum
-      assert(m.avgdl == sumDl.toDouble / expected.length)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idx))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-    }
-  }
-
-  test("compact postings transform == decode-shift of source postings") {
-    import spark.implicits._
-    val idx = Files.createTempDirectory("graft-r7-tidx").toString
-    val out = Files.createTempDirectory("graft-r7-tout").toString
-    try {
-      IndexBuilder.build(spark, sf0001, idx,
-        IndexBuilder.BuildConfig(resume = false))
-      val dead = Set(0L, 7L, 8L, 100L)
-      graft.maintain.Maintenance.compact(spark, idx, out,
-        deadOverride = Some(dead))
-      val deadArr = dead.toArray.sorted
-      def decoded(dir: String): Seq[(String, Int, Long, Int, String)] =
-        graft.build.IndexSchemas.readPostings(spark, dir)
-          .as[graft.model.PostingBlock].collect().toSeq
-          .flatMap { b =>
-            graft.codec.PostingCodec.decodeEntries(b).map(e =>
-              (b.term, b.cluster_id, e.doc, e.tf,
-                e.positions.mkString(",")))
-          }
-      // expectation: source entries, dead dropped, ids shifted
-      val expected = decoded(idx).flatMap { case (t, c, d, tf, pos) =>
-        val nid = graft.functions.TombstoneShiftExpr.shift(deadArr, d)
-        if (nid < 0) None else Some((t, c, nid, tf, pos))
-      }.sorted
-      assert(decoded(out).sorted == expected)
-      // and every block stays inside one NEW granule (the query-side
-      // split invariant)
-      val w = ManifestIO.read(s"$out/manifest.json").granule_window
-      graft.build.IndexSchemas.readPostings(spark, out)
-        .as[graft.model.PostingBlock].collect().foreach { b =>
-          assert(b.first_doc / w == b.last_doc / w,
-            s"block crosses granules: ${b.term} ${b.first_doc}..${b.last_doc}")
-        }
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idx))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-    }
-  }
 
   test("driver-sort dense ids == distributed-exchange dense ids") {
     import spark.implicits._
@@ -151,6 +52,30 @@ class Round7Spec extends SparkSpec {
       .map { case (id, v) => (id.toInt, v) }.toSeq
     assert(qs.map(_._1) == qs2.map(_._1))
     assert(qs.map(_._2.toSeq) == qs2.map(_._2.toSeq))
+
+    // the guard limit binds: every vec_id is a stride multiple, so the
+    // stride filter keeps every row and the collect stops at the limit
+    val nEmb = emb.count()
+    val cap = (nEmb / 10).toInt
+    val stride = nEmb / cap
+    val strided = emb.withColumn("vec_id", col("vec_id").cast("long") * stride)
+    val sids = qids.map(_ * stride)
+    val (b1, _, bqs) = graft.parity.IvfAdc.buildWithQueries(
+      spark, strided, kc = 4, m = 4, k = 8, queryIds = sids, sampleCap = cap)
+    val (b2, _) = graft.parity.IvfAdc.build(spark, strided, kc = 4, m = 4,
+      k = 8, sampleCap = cap)
+    assert(java.util.Arrays.deepEquals(
+      b1.centroids.asInstanceOf[Array[AnyRef]],
+      b2.centroids.asInstanceOf[Array[AnyRef]]))
+    assert(b1.codebooks.books.flatten.flatten.toSeq ==
+      b2.codebooks.books.flatten.flatten.toSeq)
+    val bqs2 = strided.filter(col("vec_id").isin(sids: _*))
+      .select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])].collect().sortBy(_._1)
+      .map { case (id, v) => (id.toInt, v) }.toSeq
+    assert(bqs.map(_._1) == sids.map(_.toInt))
+    assert(bqs.map(_._1) == bqs2.map(_._1))
+    assert(bqs.map(_._2.toSeq) == bqs2.map(_._2.toSeq))
   }
 
   test("per-row array_distinct == global distinct for shingles and fingerprints") {
